@@ -102,6 +102,29 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+
+    def as_matrix(col, n_rows: int):
+        """Row-major float64 matrix of a list<float> Arrow array.
+
+        reshape() over the flattened values would accept any list lengths
+        whose total divides n_rows, and silently pair rows with the wrong
+        values; DuckDB's list_cosine_similarity raises on unequal lengths.
+        So null or ragged embeddings are rejected here, on both sides.
+        """
+        import pyarrow.compute as pc
+
+        lens = pc.list_value_length(col)
+        lo, hi = pc.min(lens).as_py(), pc.max(lens).as_py()
+        if col.null_count or lo != hi:
+            raise ValueError(
+                "vector_knn needs every embedding to be a non-null list of one"
+                f" common length; got lengths {lo}..{hi} and"
+                f" {col.null_count} null embedding(s)"
+            )
+        # .flatten() (not .values) honours list-array offsets/null bitmaps
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        return flat.astype(np.float64).reshape(n_rows, -1)
+
     # Index side: one scan via Spark (any FS), collected as Arrow.  Metadata
     # cost only at this scale; at any scale it is O(index), the same data
     # every task previously re-read from local disk.
@@ -110,15 +133,7 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = idx.column("vec_id").to_numpy()
     labs = idx.column("label").to_numpy()
     if n_rows >= 2:
-        # .flatten() (not .values) honours list-array offsets/null bitmaps
-        mat = (
-            idx.column("embedding")
-            .combine_chunks()
-            .flatten()
-            .to_numpy(zero_copy_only=False)
-            .astype(np.float64)
-            .reshape(n_rows, -1)
-        )
+        mat = as_matrix(idx.column("embedding").combine_chunks(), n_rows)
         order = np.argsort(ids)[::-1]  # vec_id DESC: argmax tie => larger id
         ids, labs, mat = ids[order], labs[order], mat[order]
         norms = np.sqrt((mat * mat).sum(axis=1))
@@ -164,13 +179,7 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             q_ids = batch.column("vec_id").to_numpy()
             q_labs = batch.column("label").to_numpy()
-            x = (
-                batch.column("embedding")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(len(q_ids), -1)
-            )
+            x = as_matrix(batch.column("embedding"), len(q_ids))
             q_norms = np.sqrt((x * x).sum(axis=1))
             m_rows = len(q_ids)
             # vectorized self-lookup: column of each query id in the

@@ -7,11 +7,12 @@ returns DATE (we use CAST(ts AS DATE) where Spark uses to_date), and
 row_number() returns BIGINT (Spark side casts its rank to BIGINT).
 """
 
-DEC_SUM = "CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE)"
+from graft.core import DEC
 
 
 def _ds(expr: str) -> str:
-    return DEC_SUM.format(expr=expr)
+    """The oracle twin of :func:`graft.core.dec_sum`, on the same decimal."""
+    return f"CAST(SUM(CAST(({expr}) AS {DEC})) AS DOUBLE)"
 
 
 ORACLE_SQL = {

@@ -6,8 +6,6 @@ an order-insensitive multiset comparison of values.
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 
 TABLES = [
@@ -33,24 +31,6 @@ def norm_rows(rows) -> list[tuple[str, ...]]:
     return sorted(tuple(norm_cell(c) for c in r) for r in rows)
 
 
-def close_enough(a, b) -> bool:
-    if len(a) != len(b):
-        return False
-    for ra, rb in zip(a, b):
-        if len(ra) != len(rb):
-            return False
-        for ca, cb in zip(ra, rb):
-            if ca == cb:
-                continue
-            try:
-                fa, fb = float(ca), float(cb)
-            except ValueError:
-                return False
-            if not math.isclose(fa, fb, rel_tol=1e-9, abs_tol=1e-9):
-                return False
-    return True
-
-
 def check(spark, con, fn, sf_dir: str, sql: str) -> list[str]:
     """Run one Spark query + its DuckDB oracle; return problems ([] = ok)."""
     df = fn(spark, sf_dir)
@@ -66,13 +46,10 @@ def check(spark, con, fn, sf_dir: str, sql: str) -> list[str]:
         problems.append(f"rowcount {len(srows)} != {len(drows)}")
     ns, nd = norm_rows(srows), norm_rows(drows)
     if ns != nd:
-        if close_enough(ns, nd):
-            problems.append("values differ (within 1e-9 tolerance)")
-        else:
-            problems.append("VALUES MISMATCH")
-            for a, b in zip(ns, nd):
-                if a != b:
-                    problems.append(f"spark={a}")
-                    problems.append(f"duck ={b}")
-                    break
+        problems.append("VALUES MISMATCH")
+        for a, b in zip(ns, nd):
+            if a != b:
+                problems.append(f"spark={a}")
+                problems.append(f"duck ={b}")
+                break
     return problems

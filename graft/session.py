@@ -2,7 +2,9 @@
 
 Core count comes from $SPARK_GRAFT_CPUS (driver contract: the bench is also
 run at reduced core counts to measure scaling, so the master must never be
-hard-coded).  Scale-dependent settings stay parameterised here.
+hard-coded).  Only settings that change behaviour are set here; AQE,
+partition coalescing, the shuffle partition count and the join strategy are
+Spark's defaults, and tests/test_plans.py pins the plans they produce.
 """
 
 from __future__ import annotations
@@ -21,26 +23,6 @@ def build_session(app: str = "spark-graft", cpus: int | None = None) -> SparkSes
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
-        # --- r12 optimization round (guide §2.2/§9). Scale-dependent knobs
-        # are env-parameterised; defaults are scale-adaptive (AQE derives
-        # post-shuffle partition counts from data size), not tuned to this
-        # box. Production notes in OPTIMIZATION_r12.md.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
-        )
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "200"),
-        )
-        # allow shuffled-hash when a build side fits (guide §3.1); all current
-        # joins resolve to broadcast anyway, this is the safe fallback order
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        # Arrow for the Python boundary (vector_knn mapInArrow) and any
-        # toPandas debugging (guide §4/§6)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # One BLAS thread per Python worker: Spark tasks are the parallelism
         # unit; an unpinned OpenBLAS spawns cores() threads per worker and
         # spin-waits, which measured 2-5x slower on the thin-K GEMMs used by

@@ -1,6 +1,8 @@
 import datetime as dt
+import math
 import os
 
+import duckdb
 import pytest
 
 from graft import ORACLE_SQL, QUERIES
@@ -34,6 +36,22 @@ def test_oracle_parity_sf001(spark, name):
     con = duck_con(SF001)
     problems = check(spark, con, QUERIES[name], SF001, ORACLE_SQL[name])
     assert problems == [], problems
+
+
+def test_parity_mismatch_names_first_differing_row(spark):
+    """A value one ulp off the oracle is a mismatch like any other: check()
+    reports it with the first differing Spark/DuckDB row pair."""
+    def stub(spark, sf_dir):
+        return spark.createDataFrame([(1, math.nextafter(0.1, 1.0)), (2, 0.5)],
+                                     "k int, v double")
+
+    sql = "SELECT * FROM (VALUES (1, CAST(0.1 AS DOUBLE)), (2, 0.5)) t(k, v)"
+    problems = check(spark, duckdb.connect(), stub, "", sql)
+    assert problems == [
+        "VALUES MISMATCH",
+        "spark=('1', '0.10000000000000002')",
+        "duck =('1', '0.1')",
+    ]
 
 
 def test_sessionization_gap_logic(spark, tmp_path):
@@ -187,6 +205,23 @@ def test_vector_knn_degenerate_index_empty(spark, tmp_path):
     d = str(tmp_path / "knn_one")
     df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
     assert QUERIES["vector_knn"](spark, d).count() == 0
+
+
+@pytest.mark.parametrize("embeddings", [
+    # lengths 2, 2, 1, 3: the total divides the row count
+    [[1.0, 0.0], [0.0, 1.0], [1.0], [1.0, 0.0, 1.0]],
+    # 6 values over 3 rows would reshape into three 2-vectors
+    [[1.0, 2.0, 3.0], [4.0, 5.0, 6.0], None],
+], ids=["ragged", "null"])
+def test_vector_knn_rejects_ragged_or_null_embeddings(spark, tmp_path, embeddings):
+    """Embeddings that do not form an n x d matrix fail loudly, as DuckDB's
+    list_cosine_similarity does, instead of being regrouped into wrong vectors."""
+    rows = [(i, e, 0) for i, e in enumerate(embeddings)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    d = str(tmp_path / "knn_bad")
+    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    with pytest.raises(ValueError, match="non-null list of one common length"):
+        QUERIES["vector_knn"](spark, d).collect()
 
 
 def test_load_catalog_reuses_handle_per_table(spark, tmp_path):
