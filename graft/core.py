@@ -32,6 +32,12 @@ _CATALOG: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """The session's DataFrame for `<sf_dir>/<table>.parquet`.
+
+    Input tables are assumed immutable for the session's lifetime: the cached
+    handle keeps the file listing from the first read, so a table rewritten
+    in the same session reads stale files or fails on the missing ones.
+    """
     tables = _CATALOG.setdefault(spark, {})
     key = (sf_dir, table)
     df = tables.get(key)

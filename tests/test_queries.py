@@ -4,6 +4,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark.errors import PythonException
 
 from graft import ORACLE_SQL, QUERIES
 from graft.parity import check, duck_con
@@ -171,10 +172,9 @@ def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
 
 
 def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
-    """Focused unit test for the r13 broadcast-index rewrite: tie-break must
-    hold for NEGATIVE vec_ids (the r12 `-1` sentinel would mis-pick), and the
-    index side must load correctly from a Spark-written multi-file directory
-    (the r12 version pq.read_table'd a driver-local path per task)."""
+    """The tie-break must hold for NEGATIVE vec_ids (a `-1` sentinel would
+    mis-pick), and the index must be whole when it is read from a
+    Spark-written multi-file directory, several batches into one task."""
     rows = [
         (-3, [1.0, 0.0], 0),
         (-2, [1.0, 0.0], 0),  # identical to -3 and -1
@@ -207,21 +207,52 @@ def test_vector_knn_degenerate_index_empty(spark, tmp_path):
     assert QUERIES["vector_knn"](spark, d).count() == 0
 
 
-@pytest.mark.parametrize("embeddings", [
+@pytest.mark.parametrize("rows, message", [
     # lengths 2, 2, 1, 3: the total divides the row count
-    [[1.0, 0.0], [0.0, 1.0], [1.0], [1.0, 0.0, 1.0]],
+    (list(enumerate([[1.0, 0.0], [0.0, 1.0], [1.0], [1.0, 0.0, 1.0]])),
+     "every embedding to be a non-null list of one common length"),
     # 6 values over 3 rows would reshape into three 2-vectors
-    [[1.0, 2.0, 3.0], [4.0, 5.0, 6.0], None],
-], ids=["ragged", "null"])
-def test_vector_knn_rejects_ragged_or_null_embeddings(spark, tmp_path, embeddings):
-    """Embeddings that do not form an n x d matrix fail loudly, as DuckDB's
-    list_cosine_similarity does, instead of being regrouped into wrong vectors."""
-    rows = [(i, e, 0) for i, e in enumerate(embeddings)]
+    (list(enumerate([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0], None])),
+     "every embedding to be a non-null list of one common length"),
+    # the oracle partitions by vec_id and returns 3 rows, not one per input row
+    ([(1, [1.0, 0.0]), (2, [0.0, 1.0]), (2, [1.0, 1.0]), (3, [1.0, 2.0])],
+     "unique vec_ids"),
+    # DuckDB scores a zero vector as -1.0, where the division gives NaN
+    ([(1, [1.0, 0.0]), (2, [1.0, 1.0]), (3, [0.0, 0.0]), (4, [0.0, 1.0])],
+     "every embedding to have a nonzero norm"),
+], ids=["ragged", "null", "duplicate_id", "zero_norm"])
+def test_vector_knn_rejects_ragged_or_null_embeddings(spark, tmp_path, rows, message):
+    """Input outside the oracle's domain fails loudly, as DuckDB's
+    list_cosine_similarity does on unequal lengths, instead of being
+    regrouped into wrong vectors or answered with wrong neighbours.  The
+    check runs in the Python task, so it surfaces when the query runs."""
+    rows = [(i, e, 0) for i, e in rows]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     d = str(tmp_path / "knn_bad")
     df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    with pytest.raises(ValueError, match="non-null list of one common length"):
+    with pytest.raises(PythonException, match=f"ValueError: vector_knn needs {message}"):
         QUERIES["vector_knn"](spark, d).collect()
+
+
+def test_building_a_query_runs_no_spark_job(spark):
+    """Constructing a query only plans it: no scan, collect or broadcast runs
+    before the caller's action.  The first pass opens every table, since a
+    cold load() infers each schema with one job; the second builds each
+    query under its own job group, which must stay empty."""
+    for fn in QUERIES.values():
+        fn(spark, SF0001)
+    sc = spark.sparkContext
+    try:
+        for name, fn in QUERIES.items():
+            sc.setJobGroup(f"construct:{name}", name)
+            fn(spark, SF0001)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker fills from events
+    jobs = {name: list(sc.statusTracker().getJobIdsForGroup(f"construct:{name}"))
+            for name in QUERIES}
+    assert jobs == {name: [] for name in QUERIES}
 
 
 def test_load_catalog_reuses_handle_per_table(spark, tmp_path):
