@@ -6,10 +6,10 @@ Driver contract:
 - core count from $SPARK_GRAFT_CPUS (master local[$SPARK_GRAFT_CPUS])
 - output: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Methodology (guide §1.4): each query is materialised with the noop sink so we
-time the computation, not an output write; one short untimed warmup action
-first so JVM/codegen startup is not charged to the first query.  Jobs are
-labelled with setJobDescription (guide §1.5).
+Methodology: each query is materialised with the noop sink so we time the
+computation, not an output write; one short untimed warmup action first so
+JVM/codegen startup is not charged to the first query.  Jobs are labelled
+with setJobDescription.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ def main() -> None:
 
     # untimed warmup: spin up executor threads, codegen, parquet footers, and
     # the Python worker runtime (daemon fork + numpy/pyarrow import + BLAS
-    # init) so queries are timed, not interpreter startup (guide §1).
+    # init) so queries are timed, not interpreter startup.
     spark.sparkContext.setJobDescription("bench:warmup")
     run_noop(spark.range(1_000_000).selectExpr("sum(id) AS s"))
     run_noop(spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1))

@@ -21,13 +21,12 @@ from pyspark.sql import functions as F
 
 DEC = "DECIMAL(18,6)"
 
-# Session-scoped catalog of opened tables (r13, guide §7.3/§6): every
-# spark.read.parquet() call re-reads the footer to infer the schema
-# (~0.15 s of driver-side metadata work per call), and `events` alone is
-# opened by six different queries.  Reusing the DataFrame handle per
-# (session, sf_dir, table) does that work once, exactly like a catalog
-# table.  This caches NO computed data — only the logical plan / schema;
-# every query still scans the parquet from disk.
+# Session-scoped catalog of opened tables: every spark.read.parquet() call
+# re-reads the footer to infer the schema (~0.15 s of driver-side metadata
+# work per call), and `events` alone is opened by six different queries.
+# Reusing the DataFrame handle per (session, sf_dir, table) does that work
+# once, like a catalog table.  This caches NO computed data — only the
+# logical plan / schema; every query still scans the parquet from disk.
 _CATALOG: WeakKeyDictionary = WeakKeyDictionary()
 
 

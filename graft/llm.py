@@ -13,23 +13,15 @@ def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup: keep the lowest doc_id per content hash and
     report how many copies it had.
 
-    Optimized (r12, guide §2.3/§2.4): originally two window functions over
-    md5(text) => 2 Exchanges + Sort, with the full `text` column flowing
-    through the first shuffle.  Rewritten as a single groupBy(md5) with
-    min_by + count: one Exchange, partial (map-side) aggregation, and only
-    the hash plus metadata cross the shuffle — the text bytes never
-    leave the scan stage.  Equivalent because doc_id is unique, so
-    min_by(struct, doc_id) picks exactly the row row_number()=1 picked.
-
-    Optimized (r13, guide §2.3 — narrower types): group on unhex(md5) (16-byte
-    BINARY) instead of the 32-char hex STRING.  unhex is injective on md5's
-    hex output, so the grouping (and any collision behaviour) is identical;
-    the key every row carries through the map-side Sort and the Exchange is
-    half the size and cheaper to compare.  The SortAggregate itself stays:
-    min_by's struct buffer is not UnsafeRow-mutable, so Spark cannot
-    hash-aggregate it, and the join-back reshape that would permit a
-    HashAggregate trades the 2 in-memory sorts for 2 extra Exchanges of the
-    full metadata — worse at scale.
+    One groupBy on the hash with min_by + count: one Exchange with a
+    map-side partial aggregate, and only the hash and the metadata cross
+    it, never the text.  doc_id is unique, so min_by(struct, doc_id) picks
+    the row the oracle's row_number() = 1 picks.  The key is unhex(md5),
+    16 bytes of BINARY instead of 32 hex chars; unhex is injective on md5's
+    hex output, so the groups (and any collision) are the oracle's.  The
+    aggregate stays a SortAggregate: min_by's struct buffer is not
+    UnsafeRow-mutable, so Spark cannot hash-aggregate it, and a join-back
+    that would allow it costs two more Exchanges of the full metadata.
     """
     docs = load(spark, sf_dir, "documents")
     return (
@@ -53,13 +45,10 @@ def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus statistics (docs, sources, chars, words, uniques).
 
-    Optimized (r13, guide §1.2 per-task work): the word count was
-    size(split(text, ' ')) — a regex split that allocates an array of strings
-    per row only to take its length.  Spark's split keeps trailing empty
-    strings (Pattern.split(str, -1)), so size(split(t, ' ')) == #spaces + 1
-    exactly, including empty ('' -> 1) and trailing-space ('a ' -> 2) cases;
-    length(t) - length(replace(t, ' ')) + 1 computes the same integer with
-    two plain scans and one allocation, no regex.
+    Words are counted as length(t) - length(replace(t, ' ')) + 1: two
+    plain scans, no regex and no array per row.  That is the number of
+    fields a split on ' ' gives, empty ones included, as in the oracle's
+    len(string_split(text, ' ')): '' -> 1, 'a ' -> 2, 'a  b' -> 3.
     """
     docs = load(spark, sf_dir, "documents")
     n_words = F.length("text") - F.length(F.replace("text", F.lit(" "))) + F.lit(1)
@@ -102,7 +91,7 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vec_id DESC, so argmax's first-max rule picks the larger id on a tie
         t = pa.Table.from_batches(batches).sort_by([("vec_id", "descending")])
         ids = t.column("vec_id").to_numpy()
-        labs = t.column("label").to_numpy()
+        labs = t.column("label").combine_chunks()
         col = t.column("embedding").combine_chunks()
         dups = ids[1:] == ids[:-1]
         if dups.any():
@@ -154,16 +143,17 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(ids, type=pa.int64()),
-                pa.array(labs, type=pa.int32()),
+                labs,
                 pa.array(ids[nn], type=pa.int64()),
-                pa.array(labs[nn], type=pa.int32()),
+                labs.take(nn),
                 pa.array(best, type=pa.float64()),
             ],
             names=["vec_id", "label", "nn_id", "nn_label", "sim"],
         )
 
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    out = emb.coalesce(1).mapInArrow(
+    # the oracle's join on `a.vec_id <> b.vec_id` drops null ids
+    emb = load(spark, sf_dir, "embeddings").where("vec_id IS NOT NULL")
+    out = emb.select("vec_id", "label", "embedding").coalesce(1).mapInArrow(
         nearest, "vec_id bigint, label int, nn_id bigint, nn_label int, sim double"
     )
     return out.withColumn("sim", F.round("sim", 4))

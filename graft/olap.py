@@ -12,7 +12,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 analog: pricing summary report per returnflag/linestatus."""
     li = load(spark, sf_dir, "lineitem")
     return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
+        li.filter(F.col("l_shipdate") <= "1998-09-02 00:00:00")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dec_sum("l_quantity", "sum_qty"),
@@ -32,8 +32,8 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue per nation for EUROPE customers on 1996 orders (Q5-ish)."""
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        (F.col("o_orderdate") >= "1996-01-01 00:00:00")
+        & (F.col("o_orderdate") < "1997-01-01 00:00:00")
     )
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
@@ -71,8 +71,8 @@ def priority_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join)."""
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        (F.col("o_orderdate") >= "1996-01-01 00:00:00")
+        & (F.col("o_orderdate") < "1997-01-01 00:00:00")
     )
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey, "left_semi")

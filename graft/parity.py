@@ -1,7 +1,9 @@
-"""Comparison helpers shared by tools/verify_oracle.py and tests.
+"""Oracle comparison: run a query on Spark and its twin on DuckDB, then
+compare row count, schema (column names) and the order-insensitive multiset
+of values, bit-exactly.
 
-Replicates the driver's oracle check: row count, schema (column names) and
-an order-insensitive multiset comparison of values.
+Used by the oracle parity tests in tests/test_queries.py and, for norm_rows, by
+perfbench/check.py.
 """
 
 from __future__ import annotations

@@ -21,16 +21,14 @@ def build_session(app: str = "spark-graft", cpus: int | None = None) -> SparkSes
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", "32g")
         .config("spark.ui.enabled", "false")
         # One BLAS thread per Python worker: Spark tasks are the parallelism
         # unit; an unpinned OpenBLAS spawns cores() threads per worker and
         # spin-waits, which measured 2-5x slower on the thin-K GEMMs used by
-        # vector_knn (guide §4.2 — native code inside the UDF, but sized to
-        # the task)
+        # vector_knn.  OMP_NUM_THREADS also caps pyarrow's CPU pool.
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.MKL_NUM_THREADS", "1")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

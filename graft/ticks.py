@@ -25,8 +25,8 @@ def ticks_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     return (
         ev.filter(
-            (F.col("ts") >= F.lit(RANGE_LO).cast("timestamp"))
-            & (F.col("ts") < F.lit(RANGE_HI).cast("timestamp"))
+            (F.col("ts") >= RANGE_LO)
+            & (F.col("ts") < RANGE_HI)
             & (F.col("event_type") == "purchase")
         )
         .select("event_id", "ts", "user_id", "value")
@@ -88,16 +88,14 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (streaming session_window batch analog): per user,
     number of sessions split at >30 min inactivity gaps.
 
-    Optimized (r13, guide §2.3 — shuffle fewer bytes): the lag window used to
-    shuffle and sort [event_id, ts, user_id, value, unix_micros(ts)] (40 B/row)
-    ordered by (ts, event_id).  Now only [user_id, us, value] (24 B/row) cross
-    the one Exchange and the sort key is (user_id, us).  Equivalent because:
-    (a) n_events / total_value are order-independent; (b) us = unix_micros(ts)
-    is a bijection (TIMESTAMP_NTZ has exactly µs precision), so ordering by us
-    equals ordering by ts, with equal-ts rows ordered arbitrarily instead of
-    by event_id; and (c) the VALUE sequence of a sorted multiset is invariant
-    under tie ordering, so lag-gap counts per user — and hence
-    n_sessions = Σ new_session — are identical.
+    Only [user_id, us, value] (24 B/row) cross the one Exchange, and the
+    sort key is (user_id, us), with no event_id tie-break.  That matches the
+    oracle because: (a) n_events and total_value do not depend on order;
+    (b) us = unix_micros(ts) is a bijection (TIMESTAMP_NTZ has exactly µs
+    precision), so ordering by us is ordering by ts, with equal-ts rows in
+    arbitrary order; and (c) the sequence of values of a sorted multiset
+    does not depend on how ties are ordered, so the lag gaps per user, and
+    hence n_sessions = Σ new_session, are the same.
     """
     ev = load(spark, sf_dir, "events")
     # parquet ts is TIMESTAMP_NTZ; cast to TIMESTAMP (session TZ pinned to UTC)
@@ -131,11 +129,10 @@ def top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("value", "spend"),
         )
     )
-    # Optimized (r12, guide §2.4): a row_number window over ALL users needs a
-    # single-partition sort of the whole aggregate; orderBy().limit(10)
-    # compiles to TakeOrderedAndProject (per-partition top-k, driver merge,
-    # no global shuffle).  The rank window then runs over just 10 rows.
-    # Identical output: both use the total order (spend DESC, user_id).
+    # orderBy().limit(10) compiles to TakeOrderedAndProject (per-partition
+    # top-k, driver merge, no global shuffle), so the rank window runs over
+    # 10 rows rather than a single-partition sort of every user.  Same output
+    # as the oracle: both use the total order (spend DESC, user_id).
     top = spend.orderBy(F.col("spend").desc(), "user_id").limit(10)
     w = Window.orderBy(F.col("spend").desc(), F.col("user_id"))
     # row_number is INT in Spark but BIGINT in DuckDB; cast for schema parity

@@ -9,6 +9,7 @@ from graft.session import build_session  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
+SF01 = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="session")

@@ -1,4 +1,5 @@
 import datetime as dt
+import json
 import math
 import os
 
@@ -8,9 +9,10 @@ from pyspark.errors import PythonException
 
 from graft import ORACLE_SQL, QUERIES
 from graft.parity import check, duck_con
-from tests.conftest import SF0001, SF001
+from tests.conftest import SF0001, SF001, SF01
 
 import __spark_entry__ as entrymod
+import bench
 
 
 def test_contract_keys_match():
@@ -19,24 +21,46 @@ def test_contract_keys_match():
     assert len(QUERIES) >= 14
 
 
+def test_bench_prints_one_json_line(spark, monkeypatch, capsys):
+    """bench.py's stdout is exactly one JSON line: every query's time in
+    QUERIES order, their rounded sum as the value, and the scale factor."""
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF0001)
+    bench.main()
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1, lines
+    out = json.loads(lines[0])
+    assert set(out) == {"metric", "value", "unit", "queries", "sf"}
+    assert list(out["queries"]) == list(QUERIES)
+    assert out["sf"] == 0.001
+    assert out["value"] == round(sum(out["queries"].values()), 4)
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
 
 
+def _assert_oracle_parity(spark, name, sf_dir):
+    """Bit-exact parity with the DuckDB oracle: row count, column names and
+    the order-insensitive multiset of values."""
+    problems = check(spark, duck_con(sf_dir), QUERIES[name], sf_dir, ORACLE_SQL[name])
+    assert problems == [], problems
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_oracle_parity_sf0001(spark, name):
-    con = duck_con(SF0001)
-    problems = check(spark, con, QUERIES[name], SF0001, ORACLE_SQL[name])
-    assert problems == [], problems
+    _assert_oracle_parity(spark, name, SF0001)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_oracle_parity_sf001(spark, name):
     """Parity at sf0.01 — the scale factor the driver checks."""
-    con = duck_con(SF001)
-    problems = check(spark, con, QUERIES[name], SF001, ORACLE_SQL[name])
-    assert problems == [], problems
+    _assert_oracle_parity(spark, name, SF001)
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES.keys()))
+def test_oracle_parity_sf01(spark, name):
+    _assert_oracle_parity(spark, name, SF01)
 
 
 def test_parity_mismatch_names_first_differing_row(spark):
@@ -79,9 +103,9 @@ def test_sessionization_gap_logic(spark, tmp_path):
 
 
 def test_user_sessions_order_invariant(spark, tmp_path):
-    """The r13 narrow-shuffle rewrite orders by unix_micros only (no event_id
-    tie-break); per-user aggregates must be invariant to input row order,
-    including duplicated timestamps around a gap boundary."""
+    """user_sessions orders by unix_micros only (no event_id tie-break);
+    per-user aggregates must be invariant to input row order, including
+    duplicated timestamps around a gap boundary."""
     base = [
         (1, dt.datetime(2024, 1, 1, 0, 0, 0), 7, "view", 1.0, "{}"),
         (2, dt.datetime(2024, 1, 1, 0, 0, 0), 7, "view", 1.0, "{}"),   # tie at start
@@ -106,8 +130,8 @@ def test_user_sessions_order_invariant(spark, tmp_path):
 
 
 def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path):
-    """Focused unit test for the r12 mapInArrow/GEMM rewrite: self is never
-    its own neighbour, and exact similarity ties go to the LARGER id."""
+    """vector_knn: self is never its own neighbour, and exact similarity
+    ties go to the LARGER id."""
     rows = [
         (1, [1.0, 0.0], 0),
         (2, [1.0, 0.0], 0),   # identical to 1 and 3
@@ -132,9 +156,9 @@ def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path):
 
 
 def test_doc_stats_word_count_edge_cases(spark, tmp_path):
-    """Focused unit test for the r13 word-count rewrite: the length-diff
-    formula must equal size(split(text, ' ')) on empty strings, trailing
-    spaces, and consecutive spaces (split keeps empty fields)."""
+    """doc_stats' length-diff word count must equal size(split(text, ' '))
+    on empty strings, trailing spaces, and consecutive spaces (split keeps
+    empty fields)."""
     rows = [
         (1, "", "en", "s1", 0),            # split('') -> [''] = 1
         (2, "a ", "en", "s1", 2),          # ['a',''] = 2
@@ -153,7 +177,8 @@ def test_doc_stats_word_count_edge_cases(spark, tmp_path):
 
 
 def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
-    """Focused unit test for the r12 groupBy(min_by) rewrite of doc_dedup."""
+    """doc_dedup's groupBy(min_by) keeps the lowest doc_id per text, with
+    that row's metadata, and counts the copies."""
     rows = [
         (10, "hello world", "en", "s1", 11),
         (3, "hello world", "en", "s2", 11),   # dup -> survivor (min id)
@@ -207,6 +232,28 @@ def test_vector_knn_degenerate_index_empty(spark, tmp_path):
     assert QUERIES["vector_knn"](spark, d).count() == 0
 
 
+def test_vector_knn_null_id_and_label_match_oracle(spark, tmp_path):
+    """A null label comes back as a null label or nn_label, and a row with a
+    null vec_id is neither answered nor anyone's neighbour, as in the
+    oracle, where `a.vec_id <> b.vec_id` is NULL for it."""
+    rows = [
+        (1, [1.0, 0.0], 0),
+        (2, [0.9, 0.1], None),   # row 1's neighbour: nn_label is null
+        (None, [1.0, 0.0], 1),   # identical to row 1, but must not match it
+        (3, [0.0, 1.0], 1),
+        (4, [0.1, 1.0], 0),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    d = str(tmp_path / "knn_null")
+    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{d}/embeddings.parquet/*.parquet'"
+    )
+    problems = check(spark, con, QUERIES["vector_knn"], d, ORACLE_SQL["vector_knn"])
+    assert problems == [], problems
+
+
 @pytest.mark.parametrize("rows, message", [
     # lengths 2, 2, 1, 3: the total divides the row count
     (list(enumerate([[1.0, 0.0], [0.0, 1.0], [1.0], [1.0, 0.0, 1.0]])),
@@ -256,9 +303,9 @@ def test_building_a_query_runs_no_spark_job(spark):
 
 
 def test_load_catalog_reuses_handle_per_table(spark, tmp_path):
-    """Focused unit test for the r13 session-scoped catalog: load() returns
-    the SAME DataFrame handle for repeated (session, sf_dir, table) lookups
-    (schema inference once) and distinct handles for distinct dirs."""
+    """The session-scoped catalog: load() returns the SAME DataFrame handle
+    for repeated (session, sf_dir, table) lookups (schema inference once)
+    and distinct handles for distinct dirs."""
     from graft.core import load
 
     for sub in ("a", "b"):
