@@ -8,8 +8,7 @@ Driver contract:
 
 Methodology: each query is materialised with the noop sink so we time the
 computation, not an output write; one short untimed warmup action first so
-JVM/codegen startup is not charged to the first query.  Jobs are labelled
-with setJobDescription.
+JVM/codegen startup is not charged to the first query.
 """
 
 from __future__ import annotations
@@ -40,7 +39,6 @@ def main() -> None:
     # untimed warmup: spin up executor threads, codegen, parquet footers, and
     # the Python worker runtime (daemon fork + numpy/pyarrow import + BLAS
     # init) so queries are timed, not interpreter startup.
-    spark.sparkContext.setJobDescription("bench:warmup")
     run_noop(spark.range(1_000_000).selectExpr("sum(id) AS s"))
     run_noop(spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1))
 
@@ -61,7 +59,6 @@ def main() -> None:
 
     times: dict[str, float] = {}
     for name, fn in QUERIES.items():
-        spark.sparkContext.setJobDescription(f"bench:{name}")
         # t0 before fn(): driver-side query construction (opening tables,
         # building the plan) is inside the timed region.
         t0 = time.perf_counter()
@@ -69,7 +66,6 @@ def main() -> None:
         run_noop(df)
         times[name] = round(time.perf_counter() - t0, 4)
         print(f"  {name}: {times[name]:.3f}s", file=sys.stderr)
-    spark.sparkContext.setJobDescription(None)
 
     total = round(sum(times.values()), 4)
     print(

@@ -46,5 +46,10 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def dec_sum(expr: str, alias: str) -> Column:
-    """Order-independent, DuckDB-bit-identical SUM of a double expression."""
+    """Order-independent, DuckDB-bit-identical SUM of a double expression.
+
+    Domain: every row term must satisfy |x| < 1e12, because DECIMAL(18,6)
+    keeps 12 integer digits.  A larger term fails the query on both engines
+    (Spark NUMERIC_VALUE_OUT_OF_RANGE, DuckDB ConversionException).
+    """
     return F.expr(f"CAST(SUM(CAST(({expr}) AS {DEC})) AS DOUBLE)").alias(alias)

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graft.core import dec_sum, load
+from graft.core import load
 
 
 def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,8 +170,7 @@ def label_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.countDistinct("lang").alias("n_langs"),
             F.sum("n_chars").alias("total_chars"),
-            dec_sum("n_chars", "chars_dbl"),
         )
-        .withColumn("avg_chars", F.col("chars_dbl") / F.col("n_docs").cast("double"))
-        .drop("chars_dbl")
+        .withColumn("avg_chars",
+                    F.col("total_chars").cast("double") / F.col("n_docs").cast("double"))
     )

@@ -2,24 +2,29 @@
 compare row count, schema (column names) and the order-insensitive multiset
 of values, bit-exactly.
 
-Used by the oracle parity tests in tests/test_queries.py and, for norm_rows, by
+A data set is a directory of `<table>.parquet` entries, each a single file or
+a directory of part files; duck_con opens it as graft.core.load() does.  Used
+by the oracle parity tests in tests/test_queries.py and, for norm_rows, by
 perfbench/check.py.
 """
 
 from __future__ import annotations
 
-import duckdb
+import glob
+import os
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+import duckdb
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A connection with one view per `<table>.parquet` entry in sf_dir; a
+    directory is read through its `*.parquet` part files, which skips
+    `_SUCCESS` and the `.crc` files."""
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    for path in sorted(glob.glob(f"{sf_dir}/*.parquet")):
+        src = f"{path}/*.parquet" if os.path.isdir(path) else path
+        table = os.path.basename(path).removesuffix(".parquet")
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{src}')")
     return con
 
 
@@ -33,9 +38,8 @@ def norm_rows(rows) -> list[tuple[str, ...]]:
     return sorted(tuple(norm_cell(c) for c in r) for r in rows)
 
 
-def check(spark, con, fn, sf_dir: str, sql: str) -> list[str]:
-    """Run one Spark query + its DuckDB oracle; return problems ([] = ok)."""
-    df = fn(spark, sf_dir)
+def check(df, con, sql: str) -> list[str]:
+    """Collect a Spark query and run its DuckDB oracle; return problems ([] = ok)."""
     scols = [c.lower() for c in df.columns]
     srows = [tuple(r) for r in df.collect()]
     cur = con.execute(sql)

@@ -1,11 +1,10 @@
 import datetime as dt
 import json
 import math
-import os
 
 import duckdb
 import pytest
-from pyspark.errors import PythonException
+from pyspark.errors import ArithmeticException, PythonException
 
 from graft import ORACLE_SQL, QUERIES
 from graft.parity import check, duck_con
@@ -40,10 +39,26 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
+SCHEMAS = {
+    "events": "event_id long, ts timestamp, user_id long, event_type string, "
+              "value double, props string",
+    "documents": "doc_id long, text string, lang string, source string, n_chars long",
+    "embeddings": "vec_id long, embedding array<float>, label int",
+}
+
+
+def _write(spark, d, table, rows, files=1):
+    """Write rows as `<d>/<table>.parquet` in `files` part files, the layout
+    both load() and duck_con() open."""
+    df = spark.createDataFrame(rows, SCHEMAS[table])
+    df = df.coalesce(1) if files == 1 else df.repartition(files)
+    df.write.parquet(f"{d}/{table}.parquet")
+
+
 def _assert_oracle_parity(spark, name, sf_dir):
     """Bit-exact parity with the DuckDB oracle: row count, column names and
     the order-insensitive multiset of values."""
-    problems = check(spark, duck_con(sf_dir), QUERIES[name], sf_dir, ORACLE_SQL[name])
+    problems = check(QUERIES[name](spark, sf_dir), duck_con(sf_dir), ORACLE_SQL[name])
     assert problems == [], problems
 
 
@@ -66,12 +81,9 @@ def test_oracle_parity_sf01(spark, name):
 def test_parity_mismatch_names_first_differing_row(spark):
     """A value one ulp off the oracle is a mismatch like any other: check()
     reports it with the first differing Spark/DuckDB row pair."""
-    def stub(spark, sf_dir):
-        return spark.createDataFrame([(1, math.nextafter(0.1, 1.0)), (2, 0.5)],
-                                     "k int, v double")
-
+    df = spark.createDataFrame([(1, math.nextafter(0.1, 1.0)), (2, 0.5)], "k int, v double")
     sql = "SELECT * FROM (VALUES (1, CAST(0.1 AS DOUBLE)), (2, 0.5)) t(k, v)"
-    problems = check(spark, duckdb.connect(), stub, "", sql)
+    problems = check(df, duckdb.connect(), sql)
     assert problems == [
         "VALUES MISMATCH",
         "spark=('1', '0.10000000000000002')",
@@ -89,13 +101,8 @@ def test_sessionization_gap_logic(spark, tmp_path):
         (6, dt.datetime(2024, 1, 1, 1, 30, 0), 7, "view", 1.0, "{}"),   # tied ts: same session
         (5, dt.datetime(2024, 1, 2, 0, 0, 0), 8, "view", 2.0, "{}"),    # other user
     ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    d = str(tmp_path / "sess")
-    os.makedirs(d, exist_ok=True)
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/events.parquet")
+    d = str(tmp_path)
+    _write(spark, d, "events", rows)
     out = {r["user_id"]: r for r in QUERIES["user_sessions"](spark, d).collect()}
     assert out[7]["n_events"] == 5
     assert out[7]["n_sessions"] == 2
@@ -113,16 +120,10 @@ def test_user_sessions_order_invariant(spark, tmp_path):
         (4, dt.datetime(2024, 1, 1, 0, 40, 0), 7, "view", 1.0, "{}"),  # tie after gap
         (5, dt.datetime(2024, 1, 1, 2, 0, 0), 7, "view", 1.0, "{}"),   # new session
     ]
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
     results = []
     for i, rows in enumerate([base, base[::-1], base[2:] + base[:2]]):
         d = str(tmp_path / f"perm{i}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/events.parquet")
+        _write(spark, d, "events", rows)
         out = QUERIES["user_sessions"](spark, d).collect()[0]
         results.append((out["n_events"], out["n_sessions"], out["total_value"]))
     assert results[0] == (5, 3, 5.0)
@@ -138,11 +139,8 @@ def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path):
         (3, [1.0, 0.0], 1),
         (4, [0.0, 1.0], 1),   # orthogonal to the others
     ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    d = str(tmp_path / "knn")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    d = str(tmp_path)
+    _write(spark, d, "embeddings", rows)
     out = {r["vec_id"]: r for r in QUERIES["vector_knn"](spark, d).collect()}
     assert len(out) == 4
     assert out[1]["nn_id"] == 3          # tie between 2 and 3 -> larger id
@@ -166,11 +164,8 @@ def test_doc_stats_word_count_edge_cases(spark, tmp_path):
         (4, " a", "en", "s1", 2),          # ['','a'] = 2
         (5, "one two three", "de", "s2", 13),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    d = str(tmp_path / "wstats")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+    d = str(tmp_path)
+    _write(spark, d, "documents", rows)
     out = {r["lang"]: r for r in QUERIES["doc_stats"](spark, d).collect()}
     assert out["en"]["total_words"] == 1 + 2 + 3 + 2
     assert out["de"]["total_words"] == 3
@@ -184,11 +179,8 @@ def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
         (3, "hello world", "en", "s2", 11),   # dup -> survivor (min id)
         (7, "unique text", "de", "s1", 11),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    d = str(tmp_path / "dedup")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+    d = str(tmp_path)
+    _write(spark, d, "documents", rows)
     out = {r["doc_id"]: r for r in QUERIES["doc_dedup"](spark, d).collect()}
     assert set(out) == {3, 7}
     assert out[3]["n_copies"] == 2
@@ -206,11 +198,8 @@ def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
         (-1, [1.0, 0.0], 1),
         (5, [0.0, 1.0], 1),   # orthogonal to the others
     ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    d = str(tmp_path / "knn_neg")
-    df.repartition(3).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    d = str(tmp_path)
+    _write(spark, d, "embeddings", rows, files=3)
     out = {r["vec_id"]: r for r in QUERIES["vector_knn"](spark, d).collect()}
     assert len(out) == 4
     assert out[-3]["nn_id"] == -1        # tie between -2 and -1 -> larger id
@@ -224,11 +213,8 @@ def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
 def test_vector_knn_degenerate_index_empty(spark, tmp_path):
     """A single-vector index has no (a, b), a != b pair: the result is empty,
     matching the oracle's self-excluding join semantics."""
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0], 0)], "vec_id long, embedding array<float>, label int"
-    )
-    d = str(tmp_path / "knn_one")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    d = str(tmp_path)
+    _write(spark, d, "embeddings", [(1, [1.0, 0.0], 0)])
     assert QUERIES["vector_knn"](spark, d).count() == 0
 
 
@@ -243,15 +229,22 @@ def test_vector_knn_null_id_and_label_match_oracle(spark, tmp_path):
         (3, [0.0, 1.0], 1),
         (4, [0.1, 1.0], 0),
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    d = str(tmp_path / "knn_null")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{d}/embeddings.parquet/*.parquet'"
-    )
-    problems = check(spark, con, QUERIES["vector_knn"], d, ORACLE_SQL["vector_knn"])
-    assert problems == [], problems
+    d = str(tmp_path)
+    _write(spark, d, "embeddings", rows)
+    _assert_oracle_parity(spark, "vector_knn", d)
+
+
+def test_dec_sum_fails_loudly_past_its_domain(spark, tmp_path):
+    """dec_sum's domain is |term| < 1e12, the 12 integer digits of
+    DECIMAL(18,6).  A term at the limit is an overflow on both engines,
+    never a silently wrong sum."""
+    rows = [(i, dt.datetime(2024, 1, 1), i, "view", 1e12, "{}") for i in (1, 2)]
+    d = str(tmp_path)
+    _write(spark, d, "events", rows)
+    with pytest.raises(ArithmeticException, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        QUERIES["type_stats"](spark, d).collect()
+    with pytest.raises(duckdb.ConversionException):
+        duck_con(d).execute(ORACLE_SQL["type_stats"])
 
 
 @pytest.mark.parametrize("rows, message", [
@@ -273,10 +266,8 @@ def test_vector_knn_rejects_ragged_or_null_embeddings(spark, tmp_path, rows, mes
     list_cosine_similarity does on unequal lengths, instead of being
     regrouped into wrong vectors or answered with wrong neighbours.  The
     check runs in the Python task, so it surfaces when the query runs."""
-    rows = [(i, e, 0) for i, e in rows]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    d = str(tmp_path / "knn_bad")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    d = str(tmp_path)
+    _write(spark, d, "embeddings", [(i, e, 0) for i, e in rows])
     with pytest.raises(PythonException, match=f"ValueError: vector_knn needs {message}"):
         QUERIES["vector_knn"](spark, d).collect()
 
