@@ -7,8 +7,9 @@ Driver contract:
 - output: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Methodology: each query is materialised with the noop sink so we time the
-computation, not an output write; one short untimed warmup action first so
-JVM/codegen startup is not charged to the first query.
+computation, not an output write.  perfbench's untimed ``warm_up`` runs
+first, so JVM, Python-worker and JIT start-up is not charged to the first
+queries, and bench.py and perfbench time queries from the same warm state.
 """
 
 from __future__ import annotations
@@ -21,6 +22,11 @@ import time
 
 from graft import QUERIES
 from graft.session import build_session
+
+# Appended, not prepended: perfbench/ holds its own tests/ directory, which
+# must not shadow this repository's tests namespace package.
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+from run import warm_up  # noqa: E402
 
 
 def sf_from_dir(sf_dir: str) -> float:
@@ -36,26 +42,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = build_session(app="spark-graft-bench")
 
-    # untimed warmup: spin up executor threads, codegen, parquet footers, and
-    # the Python worker runtime (daemon fork + numpy/pyarrow import + BLAS
-    # init) so queries are timed, not interpreter startup.
-    run_noop(spark.range(1_000_000).selectExpr("sum(id) AS s"))
-    run_noop(spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1))
-
-    def _py_warm(batches):
-        import numpy as np
-        import pyarrow  # noqa: F401
-
-        a = np.ones((256, 256))
-        (a @ a).sum()  # initialise the BLAS dgemm kernels in this worker
-        yield from batches
-
-    n_workers = spark.sparkContext.defaultParallelism
-    run_noop(
-        spark.range(n_workers, numPartitions=n_workers).mapInArrow(
-            _py_warm, "id long"
-        )
-    )
+    warm_up(spark, sf_dir)
 
     times: dict[str, float] = {}
     for name, fn in QUERIES.items():

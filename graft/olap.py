@@ -8,6 +8,13 @@ from pyspark.sql import functions as F
 from graft.core import dec_sum, load
 
 
+def _orders_1996(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= "1996-01-01 00:00:00")
+        & (F.col("o_orderdate") < "1997-01-01 00:00:00")
+    )
+
+
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 analog: pricing summary report per returnflag/linestatus."""
     li = load(spark, sf_dir, "lineitem")
@@ -31,10 +38,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue per nation for EUROPE customers on 1996 orders (Q5-ish)."""
     li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01 00:00:00")
-        & (F.col("o_orderdate") < "1997-01-01 00:00:00")
-    )
+    orders = _orders_1996(spark, sf_dir)
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
@@ -70,10 +74,7 @@ def priority_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1996 orders having at least one returned lineitem, per priority (Q4-ish
     semi-join)."""
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01 00:00:00")
-        & (F.col("o_orderdate") < "1997-01-01 00:00:00")
-    )
+    orders = _orders_1996(spark, sf_dir)
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")

@@ -14,6 +14,6 @@ SF01 = "/root/testdata/sf0.1"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app="spark-graft-tests", cpus=min(8, os.cpu_count() or 4))
+    s = build_session(app="spark-graft-tests")
     yield s
     s.stop()

@@ -1,11 +1,12 @@
 """Plan facts: each query's final adaptive plan, checked node by node.
 
-Every query runs once at sf0.001; the test then walks the executed plan,
-through AQE query stages, and asserts the facts the design relies on:
+Every query runs once at sf0.001 and once at sf0.1; the test then walks the
+executed plan through AQE query stages, with perfbench's ``_plan_nodes``,
+and asserts the facts the design relies on:
 how many shuffles it does, which joins it picks, which filters reach the
 parquet scan, and what crosses the shuffle where that was narrowed on
-purpose.  The facts hold at sf0.1 too; a setting or rewrite that changes
-one of them has to change this table.
+purpose.  A setting or rewrite that changes one of them has to change this
+table.
 """
 
 from __future__ import annotations
@@ -16,7 +17,8 @@ from typing import NamedTuple
 import pytest
 
 from graft import QUERIES
-from tests.conftest import SF0001
+from perfbench.layers import _plan_nodes, _seq
+from tests.conftest import SF0001, SF01
 
 
 class Facts(NamedTuple):
@@ -51,30 +53,11 @@ PLAN_FACTS = {
 }
 
 
-def _seq(s) -> list:
-    return [s.apply(i) for i in range(s.size())]
-
-
-def _nodes(node):
-    """Yield every node of an executed plan, through AQE query stages."""
-    yield node
-    cls = node.getClass().getSimpleName()
-    if cls == "AdaptiveSparkPlanExec":
-        kids = [node.executedPlan()]
-    elif cls.endswith("QueryStageExec"):
-        kids = [node.plan()]
-    else:
-        kids = _seq(node.children())
-    for kid in kids:
-        yield from _nodes(kid)
-
-
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_plan_facts(spark, name):
+def _assert_plan_facts(spark, name, sf_dir):
     facts = PLAN_FACTS[name]
-    df = QUERIES[name](spark, SF0001)
+    df = QUERIES[name](spark, sf_dir)
     df.collect()  # runs the DataFrame's own QueryExecution to its final plan
-    nodes = list(_nodes(df._jdf.queryExecution().executedPlan()))
+    nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
     classes = Counter(n.getClass().getSimpleName() for n in nodes)
 
     assert classes["ShuffleExchangeExec"] == facts.exchanges, classes
@@ -99,3 +82,13 @@ def test_plan_facts(spark, name):
         assert part.getClass().getSimpleName() == "HashPartitioning"
         assert [(e.name(), e.dataType().simpleString())
                 for e in _seq(part.expressions())] == keys
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_plan_facts(spark, name):
+    _assert_plan_facts(spark, name, SF0001)
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_plan_facts_sf01(spark, name):
+    _assert_plan_facts(spark, name, SF01)
