@@ -1,11 +1,11 @@
-"""Oracle comparison: run a query on Spark and its twin on DuckDB, then
-compare row count, schema (column names) and the order-insensitive multiset
-of values, bit-exactly.
+"""The DuckDB side of the oracle comparison: an opener for a data set and the
+bit-exact normal form both engines' rows are compared in.
 
 A data set is a directory of `<table>.parquet` entries, each a single file or
-a directory of part files; duck_con opens it as graft.core.load() does.  Used
-by the oracle parity tests in tests/test_queries.py and, for norm_rows, by
-perfbench/check.py.
+a directory of part files; duck_con opens it as graft.core.load() does.
+norm_rows makes rows order-insensitive and floats bit-exact text.  The one
+comparison is perfbench/check.py's Oracle, which the parity tests in
+tests/test_queries.py call on a query's toArrow() result.
 """
 
 from __future__ import annotations
@@ -37,25 +37,3 @@ def norm_cell(x) -> str:
 def norm_rows(rows) -> list[tuple[str, ...]]:
     return sorted(tuple(norm_cell(c) for c in r) for r in rows)
 
-
-def check(df, con, sql: str) -> list[str]:
-    """Collect a Spark query and run its DuckDB oracle; return problems ([] = ok)."""
-    scols = [c.lower() for c in df.columns]
-    srows = [tuple(r) for r in df.collect()]
-    cur = con.execute(sql)
-    dcols = [d[0].lower() for d in cur.description]
-    drows = cur.fetchall()
-    problems: list[str] = []
-    if scols != dcols:
-        problems.append(f"schema {scols} != {dcols}")
-    if len(srows) != len(drows):
-        problems.append(f"rowcount {len(srows)} != {len(drows)}")
-    ns, nd = norm_rows(srows), norm_rows(drows)
-    if ns != nd:
-        problems.append("VALUES MISMATCH")
-        for a, b in zip(ns, nd):
-            if a != b:
-                problems.append(f"spark={a}")
-                problems.append(f"duck ={b}")
-                break
-    return problems

@@ -64,8 +64,9 @@ def vwap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("value * k", "notional"),
             F.sum("k").alias("total_size"),
         )
+        # try_divide: a zero total size gives a null vwap, as in DuckDB
         .withColumn(
-            "vwap", F.col("notional") / F.col("total_size").cast("double")
+            "vwap", F.try_divide("notional", F.col("total_size").cast("double"))
         )
     )
 

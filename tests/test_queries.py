@@ -3,11 +3,13 @@ import json
 import math
 
 import duckdb
+import pyarrow as pa
 import pytest
 from pyspark.errors import ArithmeticException, PythonException
 
 from graft import ORACLE_SQL, QUERIES
-from graft.parity import check, duck_con
+from graft.parity import duck_con
+from perfbench.check import Oracle
 from tests.conftest import SF0001, SF001, SF01
 
 import __spark_entry__ as entrymod
@@ -56,10 +58,11 @@ def _write(spark, d, table, rows, files=1):
 
 
 def _assert_oracle_parity(spark, name, sf_dir):
-    """Bit-exact parity with the DuckDB oracle: row count, column names and
-    the order-insensitive multiset of values."""
-    problems = check(QUERIES[name](spark, sf_dir), duck_con(sf_dir), ORACLE_SQL[name])
-    assert problems == [], problems
+    """Bit-exact parity with the DuckDB oracle: column names, row count and
+    the order-insensitive multiset of values, checked on the toArrow()
+    result the benchmark fetches."""
+    problem = Oracle(duck_con(sf_dir), [name]).check(name, QUERIES[name](spark, sf_dir).toArrow())
+    assert problem is None, problem
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
@@ -78,17 +81,19 @@ def test_oracle_parity_sf01(spark, name):
     _assert_oracle_parity(spark, name, SF01)
 
 
-def test_parity_mismatch_names_first_differing_row(spark):
-    """A value one ulp off the oracle is a mismatch like any other: check()
-    reports it with the first differing Spark/DuckDB row pair."""
-    df = spark.createDataFrame([(1, math.nextafter(0.1, 1.0)), (2, 0.5)], "k int, v double")
-    sql = "SELECT * FROM (VALUES (1, CAST(0.1 AS DOUBLE)), (2, 0.5)) t(k, v)"
-    problems = check(df, duckdb.connect(), sql)
-    assert problems == [
-        "VALUES MISMATCH",
-        "spark=('1', '0.10000000000000002')",
-        "duck =('1', '0.1')",
-    ]
+def test_parity_mismatch_names_first_differing_row(spark, tmp_path):
+    """A value one ulp off the oracle is a mismatch like any other: the
+    check names the query, the first differing row, the column and both
+    values."""
+    d = str(tmp_path)
+    _write(spark, d, "events", [(i, dt.datetime(2024, 1, 9), i, "purchase", v, "{}")
+                                for i, v in ((1, 0.1), (2, 0.5))])
+    got = QUERIES["ticks_range"](spark, d).toArrow()
+    off = [math.nextafter(v, 1.0) if v == 0.1 else v for v in got["value"].to_pylist()]
+    got = got.set_column(got.column_names.index("value"), "value", pa.array(off))
+    assert Oracle(duck_con(d), ["ticks_range"]).check("ticks_range", got) == (
+        "ticks_range: row {'event_id': '1', 'ts': '2024-01-09 00:00:00', 'user_id': '1', "
+        "'value': '0.1'} column value: spark=0.10000000000000002 oracle=0.1")
 
 
 def test_sessionization_gap_logic(spark, tmp_path):
@@ -232,6 +237,19 @@ def test_vector_knn_null_id_and_label_match_oracle(spark, tmp_path):
     d = str(tmp_path)
     _write(spark, d, "embeddings", rows)
     _assert_oracle_parity(spark, "vector_knn", d)
+
+
+def test_vwap_daily_zero_total_size_matches_oracle(spark, tmp_path):
+    """A (day, event_type) group whose sizes sum to 0 has a null vwap, as in
+    the oracle, not a division-by-zero error."""
+    d = str(tmp_path)
+    _write(spark, d, "events", [                     # (day, type): (notional, size)
+        (1, dt.datetime(2024, 1, 1), 7, "purchase", 2.0, '{"k": 3}'),   # (-6.0, 0)
+        (2, dt.datetime(2024, 1, 1), 8, "purchase", 4.0, '{"k": -3}'),
+        (3, dt.datetime(2024, 1, 1), 7, "view", 1.5, '{"k": 2}'),       # (3.0, 2)
+        (4, dt.datetime(2024, 1, 2), 9, "purchase", 3.0, '{"k": 0}'),   # (0.0, 0)
+    ])
+    _assert_oracle_parity(spark, "vwap_daily", d)
 
 
 def test_dec_sum_fails_loudly_past_its_domain(spark, tmp_path):
