@@ -167,12 +167,12 @@ ORACLE_SQL = {
         QUALIFY row_number() OVER (
             PARTITION BY vec_id ORDER BY s DESC, b_vec_id DESC) = 1
     """,
-    "label_profile": f"""
+    "label_profile": """
         SELECT label,
                count(*) AS n_docs,
                count(DISTINCT lang) AS n_langs,
                CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-               {_ds('n_chars')} / CAST(count(*) AS DOUBLE) AS avg_chars
+               CAST(SUM(n_chars) AS BIGINT) / CAST(count(*) AS DOUBLE) AS avg_chars
         FROM embeddings
         JOIN documents ON vec_id = doc_id
         GROUP BY label

@@ -4,11 +4,13 @@ import math
 
 import duckdb
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import ArithmeticException, PythonException
 
 from graft import ORACLE_SQL, QUERIES
 from graft.parity import duck_con
+from perfbench import gen
 from perfbench.check import Oracle
 from tests.conftest import SF0001, SF001, SF01
 
@@ -41,20 +43,13 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
-SCHEMAS = {
-    "events": "event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string",
-    "documents": "doc_id long, text string, lang string, source string, n_chars long",
-    "embeddings": "vec_id long, embedding array<float>, label int",
-}
-
-
-def _write(spark, d, table, rows, files=1):
-    """Write rows as `<d>/<table>.parquet` in `files` part files, the layout
-    both load() and duck_con() open."""
-    df = spark.createDataFrame(rows, SCHEMAS[table])
-    df = df.coalesce(1) if files == 1 else df.repartition(files)
-    df.write.parquet(f"{d}/{table}.parquet")
+def _write(d, table, rows, files=1):
+    """Write rows as `<d>/<table>.parquet` in `files` part files, with the
+    seed table's column types and perfbench's part-file writer: the types
+    and layout of every real data set, which load() and duck_con() open."""
+    schema = pq.read_schema(f"{SF0001}/{table}.parquet")
+    data = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
+    gen._write(data, f"{d}/{table}.parquet", files, max(len(rows), 1))
 
 
 def _assert_oracle_parity(spark, name, sf_dir):
@@ -81,13 +76,27 @@ def test_oracle_parity_sf01(spark, name):
     _assert_oracle_parity(spark, name, SF01)
 
 
+def test_hand_made_tables_read_like_the_seed_data(spark, tmp_path):
+    """A hand-made table reads back with the seed table's Spark types, so a
+    hand-made test runs the engine on the types real input has: `ts` is
+    TIMESTAMP_NTZ, not the TIMESTAMP of Spark's own INT96 writer."""
+    d = str(tmp_path)
+    _write(d, "events", [(1, dt.datetime(2024, 1, 1), 7, "view", 1.0, "{}")])
+    _write(d, "documents", [(1, "a b", "en", "s1", 3)])
+    _write(d, "embeddings", [(1, [1.0, 0.0], 0)])
+    for table in ("events", "documents", "embeddings"):
+        got = spark.read.parquet(f"{d}/{table}.parquet").schema.simpleString()
+        assert got == spark.read.parquet(f"{SF0001}/{table}.parquet").schema.simpleString()
+    assert ",ts:timestamp_ntz," in spark.read.parquet(f"{d}/events.parquet").schema.simpleString()
+
+
 def test_parity_mismatch_names_first_differing_row(spark, tmp_path):
     """A value one ulp off the oracle is a mismatch like any other: the
     check names the query, the first differing row, the column and both
     values."""
     d = str(tmp_path)
-    _write(spark, d, "events", [(i, dt.datetime(2024, 1, 9), i, "purchase", v, "{}")
-                                for i, v in ((1, 0.1), (2, 0.5))])
+    _write(d, "events", [(i, dt.datetime(2024, 1, 9), i, "purchase", v, "{}")
+                         for i, v in ((1, 0.1), (2, 0.5))])
     got = QUERIES["ticks_range"](spark, d).toArrow()
     off = [math.nextafter(v, 1.0) if v == 0.1 else v for v in got["value"].to_pylist()]
     got = got.set_column(got.column_names.index("value"), "value", pa.array(off))
@@ -107,11 +116,12 @@ def test_sessionization_gap_logic(spark, tmp_path):
         (5, dt.datetime(2024, 1, 2, 0, 0, 0), 8, "view", 2.0, "{}"),    # other user
     ]
     d = str(tmp_path)
-    _write(spark, d, "events", rows)
+    _write(d, "events", rows)
     out = {r["user_id"]: r for r in QUERIES["user_sessions"](spark, d).collect()}
     assert out[7]["n_events"] == 5
     assert out[7]["n_sessions"] == 2
     assert out[8]["n_sessions"] == 1
+    _assert_oracle_parity(spark, "user_sessions", d)
 
 
 def test_user_sessions_order_invariant(spark, tmp_path):
@@ -128,9 +138,10 @@ def test_user_sessions_order_invariant(spark, tmp_path):
     results = []
     for i, rows in enumerate([base, base[::-1], base[2:] + base[:2]]):
         d = str(tmp_path / f"perm{i}")
-        _write(spark, d, "events", rows)
+        _write(d, "events", rows)
         out = QUERIES["user_sessions"](spark, d).collect()[0]
         results.append((out["n_events"], out["n_sessions"], out["total_value"]))
+        _assert_oracle_parity(spark, "user_sessions", d)
     assert results[0] == (5, 3, 5.0)
     assert results[0] == results[1] == results[2]
 
@@ -145,7 +156,7 @@ def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path):
         (4, [0.0, 1.0], 1),   # orthogonal to the others
     ]
     d = str(tmp_path)
-    _write(spark, d, "embeddings", rows)
+    _write(d, "embeddings", rows)
     out = {r["vec_id"]: r for r in QUERIES["vector_knn"](spark, d).collect()}
     assert len(out) == 4
     assert out[1]["nn_id"] == 3          # tie between 2 and 3 -> larger id
@@ -156,6 +167,7 @@ def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path):
     assert out[4]["sim"] == 0.0
     for vid, r in out.items():
         assert r["nn_id"] != vid         # self excluded
+    _assert_oracle_parity(spark, "vector_knn", d)
 
 
 def test_doc_stats_word_count_edge_cases(spark, tmp_path):
@@ -170,10 +182,11 @@ def test_doc_stats_word_count_edge_cases(spark, tmp_path):
         (5, "one two three", "de", "s2", 13),
     ]
     d = str(tmp_path)
-    _write(spark, d, "documents", rows)
+    _write(d, "documents", rows)
     out = {r["lang"]: r for r in QUERIES["doc_stats"](spark, d).collect()}
     assert out["en"]["total_words"] == 1 + 2 + 3 + 2
     assert out["de"]["total_words"] == 3
+    _assert_oracle_parity(spark, "doc_stats", d)
 
 
 def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
@@ -185,18 +198,20 @@ def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
         (7, "unique text", "de", "s1", 11),
     ]
     d = str(tmp_path)
-    _write(spark, d, "documents", rows)
+    _write(d, "documents", rows)
     out = {r["doc_id"]: r for r in QUERIES["doc_dedup"](spark, d).collect()}
     assert set(out) == {3, 7}
     assert out[3]["n_copies"] == 2
     assert out[3]["source"] == "s2"      # metadata travels with the survivor row
     assert out[7]["n_copies"] == 1
+    _assert_oracle_parity(spark, "doc_dedup", d)
 
 
 def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
     """The tie-break must hold for NEGATIVE vec_ids (a `-1` sentinel would
     mis-pick), and the index must be whole when it is read from a
-    Spark-written multi-file directory, several batches into one task."""
+    multi-file directory (4 rows in files of 2, 2 and 0 rows), several
+    batches into one task."""
     rows = [
         (-3, [1.0, 0.0], 0),
         (-2, [1.0, 0.0], 0),  # identical to -3 and -1
@@ -204,7 +219,7 @@ def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
         (5, [0.0, 1.0], 1),   # orthogonal to the others
     ]
     d = str(tmp_path)
-    _write(spark, d, "embeddings", rows, files=3)
+    _write(d, "embeddings", rows, files=3)
     out = {r["vec_id"]: r for r in QUERIES["vector_knn"](spark, d).collect()}
     assert len(out) == 4
     assert out[-3]["nn_id"] == -1        # tie between -2 and -1 -> larger id
@@ -213,14 +228,16 @@ def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
     assert out[5]["nn_id"] == -1         # sim 0 everywhere -> largest id
     for vid, r in out.items():
         assert r["nn_id"] != vid         # self excluded
+    _assert_oracle_parity(spark, "vector_knn", d)
 
 
 def test_vector_knn_degenerate_index_empty(spark, tmp_path):
     """A single-vector index has no (a, b), a != b pair: the result is empty,
     matching the oracle's self-excluding join semantics."""
     d = str(tmp_path)
-    _write(spark, d, "embeddings", [(1, [1.0, 0.0], 0)])
+    _write(d, "embeddings", [(1, [1.0, 0.0], 0)])
     assert QUERIES["vector_knn"](spark, d).count() == 0
+    _assert_oracle_parity(spark, "vector_knn", d)
 
 
 def test_vector_knn_null_id_and_label_match_oracle(spark, tmp_path):
@@ -235,7 +252,7 @@ def test_vector_knn_null_id_and_label_match_oracle(spark, tmp_path):
         (4, [0.1, 1.0], 0),
     ]
     d = str(tmp_path)
-    _write(spark, d, "embeddings", rows)
+    _write(d, "embeddings", rows)
     _assert_oracle_parity(spark, "vector_knn", d)
 
 
@@ -243,7 +260,7 @@ def test_vwap_daily_zero_total_size_matches_oracle(spark, tmp_path):
     """A (day, event_type) group whose sizes sum to 0 has a null vwap, as in
     the oracle, not a division-by-zero error."""
     d = str(tmp_path)
-    _write(spark, d, "events", [                     # (day, type): (notional, size)
+    _write(d, "events", [                     # (day, type): (notional, size)
         (1, dt.datetime(2024, 1, 1), 7, "purchase", 2.0, '{"k": 3}'),   # (-6.0, 0)
         (2, dt.datetime(2024, 1, 1), 8, "purchase", 4.0, '{"k": -3}'),
         (3, dt.datetime(2024, 1, 1), 7, "view", 1.5, '{"k": 2}'),       # (3.0, 2)
@@ -252,13 +269,24 @@ def test_vwap_daily_zero_total_size_matches_oracle(spark, tmp_path):
     _assert_oracle_parity(spark, "vwap_daily", d)
 
 
+def test_label_profile_large_char_counts_match_oracle(spark, tmp_path):
+    """avg_chars is the exact long total over the count on both engines.
+    Through the DECIMAL(18,6) sum, DuckDB's cast back to double misrounds
+    once the unscaled sum passes 2^53, well inside dec_sum's domain."""
+    d = str(tmp_path)
+    _write(d, "documents", [(1, "a", "en", "s1", 830993926105),
+                            (2, "b", "en", "s1", 998272762405)])
+    _write(d, "embeddings", [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0)])
+    _assert_oracle_parity(spark, "label_profile", d)
+
+
 def test_dec_sum_fails_loudly_past_its_domain(spark, tmp_path):
     """dec_sum's domain is |term| < 1e12, the 12 integer digits of
     DECIMAL(18,6).  A term at the limit is an overflow on both engines,
     never a silently wrong sum."""
     rows = [(i, dt.datetime(2024, 1, 1), i, "view", 1e12, "{}") for i in (1, 2)]
     d = str(tmp_path)
-    _write(spark, d, "events", rows)
+    _write(d, "events", rows)
     with pytest.raises(ArithmeticException, match="NUMERIC_VALUE_OUT_OF_RANGE"):
         QUERIES["type_stats"](spark, d).collect()
     with pytest.raises(duckdb.ConversionException):
@@ -285,7 +313,7 @@ def test_vector_knn_rejects_ragged_or_null_embeddings(spark, tmp_path, rows, mes
     regrouped into wrong vectors or answered with wrong neighbours.  The
     check runs in the Python task, so it surfaces when the query runs."""
     d = str(tmp_path)
-    _write(spark, d, "embeddings", [(i, e, 0) for i, e in rows])
+    _write(d, "embeddings", [(i, e, 0) for i, e in rows])
     with pytest.raises(PythonException, match=f"ValueError: vector_knn needs {message}"):
         QUERIES["vector_knn"](spark, d).collect()
 
@@ -318,10 +346,7 @@ def test_load_catalog_reuses_handle_per_table(spark, tmp_path):
     from graft.core import load
 
     for sub in ("a", "b"):
-        d = str(tmp_path / sub)
-        spark.range(3).selectExpr("id AS x").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/t.parquet")
+        gen._write(pa.table({"x": [0, 1, 2]}), str(tmp_path / sub / "t.parquet"), 1, 3)
     da1 = load(spark, str(tmp_path / "a"), "t")
     da2 = load(spark, str(tmp_path / "a"), "t")
     db = load(spark, str(tmp_path / "b"), "t")
