@@ -6,10 +6,19 @@ accumulates in whatever order partitions finish, so Spark and DuckDB would
 disagree in the last few ulps.  All input monetary/measure columns carry at
 most a handful of decimal digits, so we cast each row-level term to
 DECIMAL(18,6) (exact, order-independent addition) and cast the exact sum back
-to DOUBLE.  Both engines perform the identical correctly-rounded double->
-decimal->double conversions, giving bit-identical results regardless of
+to DOUBLE.  Spark converts through decimal text: a double becomes a decimal
+from Double.toString, and the sum becomes a double by BigDecimal.doubleValue.
+DuckDB's binary casts round differently (a row term can land one unit of the
+sixth decimal off, and a sum whose unscaled value passes 2^53 casts to a
+neighbouring double), so the oracle reproduces Spark's conversions through
+VARCHAR (graft/oracle.py `_ds`), giving bit-identical results regardless of
 partitioning.  Ratios (averages, VWAP) divide two such bit-identical numbers,
 which is again deterministic under IEEE-754.
+
+Remaining caveat: Java 17's Double.toString is not always the shortest
+decimal that round-trips (JDK-4511638, fixed in JDK 19), while DuckDB's
+VARCHAR is.  A row term whose two texts differ could round to different
+decimals near a tie of the sixth digit; no such term has been found yet.
 """
 
 from __future__ import annotations

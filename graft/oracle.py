@@ -11,8 +11,13 @@ from graft.core import DEC
 
 
 def _ds(expr: str) -> str:
-    """The oracle twin of :func:`graft.core.dec_sum`, on the same decimal."""
-    return f"CAST(SUM(CAST(({expr}) AS {DEC})) AS DOUBLE)"
+    """The oracle twin of :func:`graft.core.dec_sum`, on the same decimal.
+
+    Both double<->decimal casts go through VARCHAR, the decimal text Spark
+    converts through; DuckDB's binary casts round differently (graft/core.py).
+    """
+    return (f"CAST(CAST(SUM(CAST(CAST(({expr}) AS VARCHAR) AS {DEC}))"
+            " AS VARCHAR) AS DOUBLE)")
 
 
 ORACLE_SQL = {
@@ -44,7 +49,7 @@ ORACLE_SQL = {
         SELECT day, event_type,
                {_ds('value * k')} AS notional,
                CAST(SUM(k) AS BIGINT) AS total_size,
-               {_ds('value * k')} / CAST(CAST(SUM(k) AS BIGINT) AS DOUBLE) AS vwap
+               notional / CAST(total_size AS DOUBLE) AS vwap
         FROM sized
         GROUP BY day, event_type
     """,
@@ -96,8 +101,8 @@ ORACLE_SQL = {
                {_ds('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
                {_ds('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
                count(*) AS count_order,
-               {_ds('l_quantity')} / CAST(count(*) AS DOUBLE) AS avg_qty,
-               {_ds('l_extendedprice')} / CAST(count(*) AS DOUBLE) AS avg_price
+               sum_qty / CAST(count_order AS DOUBLE) AS avg_qty,
+               sum_base_price / CAST(count_order AS DOUBLE) AS avg_price
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         GROUP BY l_returnflag, l_linestatus
@@ -172,7 +177,7 @@ ORACLE_SQL = {
                count(*) AS n_docs,
                count(DISTINCT lang) AS n_langs,
                CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-               CAST(SUM(n_chars) AS BIGINT) / CAST(count(*) AS DOUBLE) AS avg_chars
+               total_chars / CAST(n_docs AS DOUBLE) AS avg_chars
         FROM embeddings
         JOIN documents ON vec_id = doc_id
         GROUP BY label

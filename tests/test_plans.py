@@ -56,7 +56,7 @@ PLAN_FACTS = {
 def _assert_plan_facts(spark, name, sf_dir):
     facts = PLAN_FACTS[name]
     df = QUERIES[name](spark, sf_dir)
-    df.collect()  # runs the DataFrame's own QueryExecution to its final plan
+    df.toArrow()  # runs the DataFrame's own QueryExecution to its final plan
     nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
     classes = Counter(n.getClass().getSimpleName() for n in nodes)
 
