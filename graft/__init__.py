@@ -6,7 +6,7 @@ required by the driver contract.
 
 Every declared query has a DuckDB oracle twin in :mod:`graft.oracle`; both
 sides are written so the results are bit-identical (see graft/core.py notes
-on decimal-stabilised sums).
+on exact sums of doubles as BIGINT micro-units).
 """
 
 from graft import llm, olap, ticks

@@ -1,24 +1,17 @@
 """Shared helpers.
 
-Oracle-parity note (why the DECIMAL dance): the driver compares every query
-against DuckDB with an order-insensitive value hash.  A plain SUM(double)
-accumulates in whatever order partitions finish, so Spark and DuckDB would
-disagree in the last few ulps.  All input monetary/measure columns carry at
-most a handful of decimal digits, so we cast each row-level term to
-DECIMAL(18,6) (exact, order-independent addition) and cast the exact sum back
-to DOUBLE.  Spark converts through decimal text: a double becomes a decimal
-from Double.toString, and the sum becomes a double by BigDecimal.doubleValue.
-DuckDB's binary casts round differently (a row term can land one unit of the
-sixth decimal off, and a sum whose unscaled value passes 2^53 casts to a
-neighbouring double), so the oracle reproduces Spark's conversions through
-VARCHAR (graft/oracle.py `_ds`), giving bit-identical results regardless of
-partitioning.  Ratios (averages, VWAP) divide two such bit-identical numbers,
-which is again deterministic under IEEE-754.
-
-Remaining caveat: Java 17's Double.toString is not always the shortest
-decimal that round-trips (JDK-4511638, fixed in JDK 19), while DuckDB's
-VARCHAR is.  A row term whose two texts differ could round to different
-decimals near a tie of the sixth digit; no such term has been found yet.
+Oracle-parity note (why sums count micro-units): the driver compares every
+query against DuckDB with an order-insensitive value hash.  A plain
+SUM(double) accumulates in whatever order partitions finish, so Spark and
+DuckDB would disagree in the last few ulps.  All input monetary/measure
+columns carry at most a handful of decimal digits, so each row term is
+rounded to an integer count of micro-units (µ-units, 1e-6) and summed as a
+BIGINT, like every other exact sum here: integer addition is exact and does
+not depend on order.  The row rounding is plain IEEE arithmetic that both
+engines compute alike, and the exact µ-unit sum is converted to DOUBLE once
+per group, through a decimal that is exact (graft/oracle.py `_ds` is the
+oracle's twin).  Ratios (averages, VWAP) divide two such bit-identical
+numbers, which is again deterministic under IEEE-754.
 """
 
 from __future__ import annotations
@@ -27,8 +20,6 @@ from weakref import WeakKeyDictionary
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-DEC = "DECIMAL(18,6)"
 
 # Session-scoped catalog of opened tables: every spark.read.parquet() call
 # re-reads the footer to infer the schema (~0.15 s of driver-side metadata
@@ -57,8 +48,22 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 def dec_sum(expr: str, alias: str) -> Column:
     """Order-independent, DuckDB-bit-identical SUM of a double expression.
 
-    Domain: every row term must satisfy |x| < 1e12, because DECIMAL(18,6)
-    keeps 12 integer digits.  A larger term fails the query on both engines
-    (Spark NUMERIC_VALUE_OUT_OF_RANGE, DuckDB ConversionException).
+    Each row term x becomes sign(x) * floor(|x| * 1e6 + 0.5) µ-units, a
+    BIGINT: rounding the magnitude rounds half away from zero, as a HALF_UP
+    decimal cast does, on negative terms too.  The BIGINT sum times 0.000001
+    is an exact DECIMAL(27,6), so the one DOUBLE cast per group is correctly
+    rounded.  A null term is skipped, as SUM skips nulls.
+
+    Domain, checked on both engines, never a silently wrong sum:
+    - every row term satisfies |x| < 1e12, so its µ-units fit a BIGINT with
+      room for the sum; a larger term, NaN or ±inf raises
+      `dec_sum: |term| >= 1e12` (Spark raise_error, DuckDB error);
+    - a group's µ-unit sum stays below 2^63 (|sum| < ~9.22e12); past it
+      Spark raises ARITHMETIC_OVERFLOW and DuckDB ConversionException.
+      Spark checks every partial sum, so it may also raise on a group whose
+      terms reach 2^63 in some order but whose total does not.
     """
-    return F.expr(f"CAST(SUM(CAST(({expr}) AS {DEC})) AS DOUBLE)").alias(alias)
+    x = f"({expr})"
+    term = (f"CASE WHEN abs({x}) >= 1e12 THEN raise_error('dec_sum: |term| >= 1e12')"
+            f" ELSE CAST(sign({x}) * floor(abs({x}) * 1e6 + 0.5) AS BIGINT) END")
+    return F.expr(f"CAST(SUM({term}) * 0.000001 AS DOUBLE)").alias(alias)

@@ -7,17 +7,21 @@ returns DATE (we use CAST(ts AS DATE) where Spark uses to_date), and
 row_number() returns BIGINT (Spark side casts its rank to BIGINT).
 """
 
-from graft.core import DEC
-
 
 def _ds(expr: str) -> str:
-    """The oracle twin of :func:`graft.core.dec_sum`, on the same decimal.
+    """The oracle twin of :func:`graft.core.dec_sum`: a BIGINT sum of µ-units.
 
-    Both double<->decimal casts go through VARCHAR, the decimal text Spark
-    converts through; DuckDB's binary casts round differently (graft/core.py).
+    Written in DuckDB's own SQL, not from a shared template, so the reference
+    stays independent.  It differs from Spark's form in three places:
+    error() where Spark has raise_error(); the HUGEINT sum is cast to BIGINT,
+    so a sum past 2^63 µ-units fails here as it does in Spark; and the exact
+    DECIMAL sum reaches DOUBLE through VARCHAR, once per group, because
+    DuckDB 1.0.0's binary DECIMAL->DOUBLE cast misrounds past 2^53.
     """
-    return (f"CAST(CAST(SUM(CAST(CAST(({expr}) AS VARCHAR) AS {DEC}))"
-            " AS VARCHAR) AS DOUBLE)")
+    x = f"({expr})"
+    term = (f"CASE WHEN abs({x}) >= 1e12 THEN error('dec_sum: |term| >= 1e12')"
+            f" ELSE CAST(sign({x}) * floor(abs({x}) * 1e6 + 0.5) AS BIGINT) END")
+    return f"CAST(CAST(CAST(SUM({term}) AS BIGINT) * 0.000001 AS VARCHAR) AS DOUBLE)"
 
 
 ORACLE_SQL = {

@@ -18,6 +18,7 @@ from graft.core import dec_sum, load
 RANGE_LO = "2024-01-08 00:00:00"
 RANGE_HI = "2024-01-15 00:00:00"
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
+_ID_OF_VALUE = "CASE WHEN value IS NOT NULL THEN event_id END"
 
 
 def ticks_range(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,10 +41,12 @@ def candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(
             F.col("event_type"), F.date_trunc("hour", "ts").alias("bucket")
         ).agg(
-            F.expr("min_by(value, event_id)").alias("open"),
+            # a row with a null ordering is skipped, so open and close skip
+            # null values, as DuckDB's arg_min/arg_max do
+            F.expr(f"min_by(value, {_ID_OF_VALUE})").alias("open"),
             F.max("value").alias("high"),
             F.min("value").alias("low"),
-            F.expr("max_by(value, event_id)").alias("close"),
+            F.expr(f"max_by(value, {_ID_OF_VALUE})").alias("close"),
             dec_sum("value", "volume"),
             F.count(F.lit(1)).alias("n_ticks"),
         )

@@ -4,8 +4,9 @@ Every query runs once at sf0.001 and once at sf0.1; the test then walks the
 executed plan through AQE query stages, with perfbench's ``_plan_nodes``,
 and asserts the facts the design relies on:
 how many shuffles it does, which joins it picks, which filters reach the
-parquet scan, and what crosses the shuffle where that was narrowed on
-purpose.  A setting or rewrite that changes one of them has to change this
+parquet scan, what crosses the shuffle where that was narrowed on
+purpose, and that no aggregate sums into a decimal (dec_sum's sum is a
+BIGINT of micro-units).  A setting or rewrite that changes one of them has to change this
 table.
 """
 
@@ -67,6 +68,11 @@ def _assert_plan_facts(spark, name, sf_dir):
                      if facts.broadcast_joins else {})
     for cls in facts.has:
         assert classes[cls] >= 1, classes
+
+    aggs = [(n.getClass().getSimpleName(), ae.aggregateFunction().dataType().simpleString())
+            for n in nodes if n.getClass().getSimpleName().endswith("AggregateExec")
+            for ae in _seq(n.aggregateExpressions())]
+    assert not [a for a in aggs if a[1].startswith("decimal")], aggs
 
     pushed = [n.metadata().apply("PushedFilters") for n in nodes
               if n.getClass().getSimpleName() == "FileSourceScanExec"]

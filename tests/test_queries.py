@@ -1,12 +1,13 @@
 import datetime as dt
 import json
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.errors import ArithmeticException, PythonException
+from pyspark.errors import ArithmeticException, PythonException, SparkRuntimeException
 
 from graft import ORACLE_SQL, QUERIES
 from graft.parity import duck_con
@@ -264,10 +265,22 @@ def test_vwap_daily_zero_total_size_matches_oracle(spark, tmp_path):
     _assert_oracle_parity(spark, "vwap_daily", d)
 
 
+def test_candles_hourly_open_close_skip_null_values(spark, tmp_path):
+    """A candle opens and closes on its first and last non-null value, as
+    the oracle's arg_min/arg_max do; an hour of only null values has null
+    open, close and volume."""
+    d = str(tmp_path)
+    _write(d, "events", [(i, dt.datetime(2024, 1, 1, h), 7, "view", v, "{}")
+                         for i, h, v in ((1, 0, None), (2, 0, 2.0), (3, 0, 3.0),
+                                         (4, 0, None), (5, 1, None))])
+    out = {r["bucket"].hour: r for r in _assert_oracle_parity(spark, "candles_hourly", d)}
+    assert (out[0]["open"], out[0]["close"], out[0]["volume"]) == (2.0, 3.0, 5.0)
+    assert (out[1]["open"], out[1]["close"], out[1]["volume"]) == (None, None, None)
+
+
 def test_label_profile_large_char_counts_match_oracle(spark, tmp_path):
-    """avg_chars is the exact long total over the count on both engines.
-    Through the DECIMAL(18,6) sum, DuckDB's cast back to double misrounds
-    once the unscaled sum passes 2^53, well inside dec_sum's domain."""
+    """avg_chars is the exact long total over the count on both engines,
+    also once the total passes 2^53."""
     d = str(tmp_path)
     _write(d, "documents", [(1, "a", "en", "s1", 830993926105),
                             (2, "b", "en", "s1", 998272762405)])
@@ -275,27 +288,49 @@ def test_label_profile_large_char_counts_match_oracle(spark, tmp_path):
     _assert_oracle_parity(spark, "label_profile", d)
 
 
-def test_dec_sum_past_2_53_unscaled_matches_oracle(spark, tmp_path):
-    """A sum above ~9.0e9 has an unscaled DECIMAL(18,6) value past 2^53,
-    inside dec_sum's domain.  DuckDB's binary decimal->double cast misrounds
-    it where Spark's does not, so the oracle casts through VARCHAR."""
+@pytest.mark.parametrize("terms, total", [
+    ([4653745697.64496, 4938973494.774893], 9592719192.419853),
+    ([5e-07, -5e-07, 1.5e-06, -2.5e-06, 1.0000005, -2.4999995, 0.1, 0.2], -1.2),
+    ([-1.25, -3.000001, 2.5, None], -1.750001),
+    ([999999999999.0] * 9, 8999999999991.0),
+], ids=["past_2_53", "half_units", "negative_and_null", "near_sum_limit"])
+def test_dec_sum_matches_oracle(spark, tmp_path, terms, total):
+    """dec_sum rounds each term half away from zero to six decimals and sums
+    exactly, independently of both engines: the total is that of Python's
+    Decimal.  Covered: a sum above ~9.0e9, whose µ-units pass 2^53 (DuckDB's
+    binary DECIMAL->DOUBLE cast misrounds it), terms at half units of either
+    sign, a null term, and a sum just below 2^63 µ-units."""
     d = str(tmp_path)
     _write(d, "events", [(i, dt.datetime(2024, 1, 1), 7, "view", v, "{}")
-                         for i, v in ((1, 4653745697.64496), (2, 4938973494.774893))])
-    for name in ("type_stats", "candles_hourly"):
-        _assert_oracle_parity(spark, name, d)
+                         for i, v in enumerate(terms, 1)])
+    exact = sum(Decimal(repr(v)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+                for v in terms if v is not None)
+    assert float(exact) == total
+    (out,) = _assert_oracle_parity(spark, "type_stats", d)
+    assert out["total_value"] == total
+    _assert_oracle_parity(spark, "candles_hourly", d)
 
 
-def test_dec_sum_fails_loudly_past_its_domain(spark, tmp_path):
-    """dec_sum's domain is |term| < 1e12, the 12 integer digits of
-    DECIMAL(18,6).  A term at the limit is an overflow on both engines,
-    never a silently wrong sum."""
-    rows = [(i, dt.datetime(2024, 1, 1), i, "view", 1e12, "{}") for i in (1, 2)]
+_TERM_LIMIT = (SparkRuntimeException, r"dec_sum: \|term\| >= 1e12",
+               duckdb.InvalidInputException, r"dec_sum: \|term\| >= 1e12")
+
+
+@pytest.mark.parametrize("terms, spark_error, spark_match, duck_error, duck_match", [
+    *[([v, v], *_TERM_LIMIT) for v in (1e12, -1e12, math.nan, math.inf, -math.inf)],
+    ([999999999999.0] * 10, ArithmeticException, "ARITHMETIC_OVERFLOW",
+     duckdb.ConversionException, "out of range for the destination type INT64"),
+], ids=["1e12", "-1e12", "nan", "inf", "-inf", "sum_past_2_63"])
+def test_dec_sum_fails_loudly_past_its_domain(spark, tmp_path, terms, spark_error,
+                                             spark_match, duck_error, duck_match):
+    """dec_sum's domain: every term has |x| < 1e12, and a group's sum stays
+    below 2^63 µ-units (~9.22e12).  A term at the limit, NaN or ±inf, or a
+    sum past it, fails on both engines, never giving a silently wrong sum."""
     d = str(tmp_path)
-    _write(d, "events", rows)
-    with pytest.raises(ArithmeticException, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+    _write(d, "events", [(i, dt.datetime(2024, 1, 1), i, "view", v, "{}")
+                         for i, v in enumerate(terms, 1)])
+    with pytest.raises(spark_error, match=spark_match):
         QUERIES["type_stats"](spark, d).toArrow()
-    with pytest.raises(duckdb.ConversionException):
+    with pytest.raises(duck_error, match=duck_match):
         duck_con(d).execute(ORACLE_SQL["type_stats"])
 
 
