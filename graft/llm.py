@@ -16,12 +16,17 @@ def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     One groupBy on the hash with min_by + count: one Exchange with a
     map-side partial aggregate, and only the hash and the metadata cross
     it, never the text.  doc_id is unique, so min_by(struct, doc_id) picks
-    the row the oracle's row_number() = 1 picks.  The key is unhex(md5),
-    16 bytes of BINARY instead of 32 hex chars; unhex is injective on md5's
-    hex output, so the groups (and any collision) are the oracle's.  The
-    aggregate stays a SortAggregate: min_by's struct buffer is not
-    UnsafeRow-mutable, so Spark cannot hash-aggregate it, and a join-back
-    that would allow it costs two more Exchanges of the full metadata.
+    the row the oracle's row_number() = 1 picks.  The ordering is the struct
+    (doc_id IS NULL, doc_id), because min_by skips a null ordering: a text
+    whose only copy has a null doc_id keeps that copy's metadata, as the
+    oracle's ORDER BY doc_id (NULLS LAST) does.  Among several null-id
+    copies of one text both engines keep an arbitrary one.  The key is
+    unhex(md5), 16 bytes of BINARY instead of 32 hex chars; unhex is
+    injective on md5's hex output, so the groups (and any collision) are
+    the oracle's.  The aggregate stays a SortAggregate: min_by's struct
+    buffer is not UnsafeRow-mutable, so Spark cannot hash-aggregate it, and
+    a join-back that would allow it costs two more Exchanges of the full
+    metadata.
     """
     docs = load(spark, sf_dir, "documents")
     return (
@@ -32,7 +37,8 @@ def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.expr(
                 "min_by(named_struct('doc_id', doc_id, 'lang', lang,"
-                " 'source', source, 'n_chars', n_chars), doc_id)"
+                " 'source', source, 'n_chars', n_chars),"
+                " named_struct('null_id', doc_id IS NULL, 'doc_id', doc_id))"
             ).alias("keep"),
             F.count(F.lit(1)).alias("n_copies"),
         )

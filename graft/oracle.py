@@ -19,7 +19,7 @@ def _ds(expr: str) -> str:
     DuckDB 1.0.0's binary DECIMAL->DOUBLE cast misrounds past 2^53.
     """
     x = f"({expr})"
-    term = (f"CASE WHEN abs({x}) >= 1e12 THEN error('dec_sum: |term| >= 1e12')"
+    term = (f"CASE WHEN abs({x}) >= 2e9 THEN error('dec_sum: |term| >= 2e9')"
             f" ELSE CAST(sign({x}) * floor(abs({x}) * 1e6 + 0.5) AS BIGINT) END")
     return f"CAST(CAST(CAST(SUM({term}) AS BIGINT) * 0.000001 AS VARCHAR) AS DOUBLE)"
 

@@ -99,7 +99,9 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision), so ordering by us is ordering by ts, with equal-ts rows in
     arbitrary order; and (c) the sequence of values of a sorted multiset
     does not depend on how ties are ordered, so the lag gaps per user, and
-    hence n_sessions = Σ new_session, are the same.
+    hence n_sessions = Σ new_session, are the same.  A null ts makes its own
+    session: Spark sorts it first, where it and the row after it have a
+    null lag, and the oracle sorts it last, with a null gap.
     """
     ev = load(spark, sf_dir, "events")
     # parquet ts is TIMESTAMP_NTZ; cast to TIMESTAMP (session TZ pinned to UTC)
@@ -136,8 +138,10 @@ def top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orderBy().limit(10) compiles to TakeOrderedAndProject (per-partition
     # top-k, driver merge, no global shuffle), so the rank window runs over
     # 10 rows rather than a single-partition sort of every user.  Same output
-    # as the oracle: both use the total order (spend DESC, user_id).
-    top = spend.orderBy(F.col("spend").desc(), "user_id").limit(10)
-    w = Window.orderBy(F.col("spend").desc(), F.col("user_id"))
+    # as the oracle: both use the total order (spend DESC, user_id), with a
+    # null user_id last, as DuckDB sorts it (Spark's ASC puts nulls first).
+    by_id = F.col("user_id").asc_nulls_last()
+    top = spend.orderBy(F.col("spend").desc(), by_id).limit(10)
+    w = Window.orderBy(F.col("spend").desc(), by_id)
     # row_number is INT in Spark but BIGINT in DuckDB; cast for schema parity
     return top.withColumn("rank", F.row_number().over(w).cast("long"))

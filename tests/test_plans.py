@@ -1,13 +1,14 @@
 """Plan facts: each query's final adaptive plan, checked node by node.
 
-Every query runs once at sf0.001 and once at sf0.1; the test then walks the
-executed plan through AQE query stages, with perfbench's ``_plan_nodes``,
-and asserts the facts the design relies on:
+At sf0.001, sf0.01 and sf0.1 the test takes the query's one seed run, the
+run whose toArrow() result tests/test_queries.py checks against the oracle
+(conftest's ``seed_run``), walks its executed plan through AQE query stages
+with perfbench's ``_plan_nodes``, and asserts the facts the design relies on:
 how many shuffles it does, which joins it picks, which filters reach the
 parquet scan, what crosses the shuffle where that was narrowed on
 purpose, and that no aggregate sums into a decimal (dec_sum's sum is a
-BIGINT of micro-units).  A setting or rewrite that changes one of them has to change this
-table.
+BIGINT of micro-units).  A setting or rewrite that changes one of them has
+to change this table.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ import pytest
 
 from graft import QUERIES
 from perfbench.layers import _plan_nodes, _seq
-from tests.conftest import SF0001, SF01
+from tests.conftest import SF0001, SF001, SF01
 
 
 class Facts(NamedTuple):
@@ -54,10 +55,10 @@ PLAN_FACTS = {
 }
 
 
-def _assert_plan_facts(spark, name, sf_dir):
+def _assert_plan_facts(name, df):
+    """PLAN_FACTS[name] on the final plan of df's own QueryExecution, which
+    an action on df must already have run."""
     facts = PLAN_FACTS[name]
-    df = QUERIES[name](spark, sf_dir)
-    df.toArrow()  # runs the DataFrame's own QueryExecution to its final plan
     nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
     classes = Counter(n.getClass().getSimpleName() for n in nodes)
 
@@ -91,10 +92,15 @@ def _assert_plan_facts(spark, name, sf_dir):
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_plan_facts(spark, name):
-    _assert_plan_facts(spark, name, SF0001)
+def test_plan_facts(seed_run, name):
+    _assert_plan_facts(name, seed_run(name, SF0001)[0])
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_plan_facts_sf01(spark, name):
-    _assert_plan_facts(spark, name, SF01)
+def test_plan_facts_sf001(seed_run, name):
+    _assert_plan_facts(name, seed_run(name, SF001)[0])
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_plan_facts_sf01(seed_run, name):
+    _assert_plan_facts(name, seed_run(name, SF01)[0])

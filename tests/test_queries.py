@@ -52,31 +52,34 @@ def _write(d, table, rows, files=1):
     gen._write(data, f"{d}/{table}.parquet", files, max(len(rows), 1))
 
 
-def _assert_oracle_parity(spark, name, sf_dir):
+def _assert_matches_oracle(name, sf_dir, got):
     """Bit-exact parity with the DuckDB oracle: column names, row count and
-    the order-insensitive multiset of values, checked on the toArrow()
-    result the benchmark fetches.  Returns that result's rows, so a test's
+    the order-insensitive multiset of values, checked on got, a toArrow()
+    result as the benchmark fetches it.  Returns its rows, so a test's
     hand-computed values are asserted on the run the oracle passed."""
-    got = QUERIES[name](spark, sf_dir).toArrow()
     problem = Oracle(duck_con(sf_dir), [name]).check(name, got)
     assert problem is None, problem
     return got.to_pylist()
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES.keys()))
-def test_oracle_parity_sf0001(spark, name):
-    _assert_oracle_parity(spark, name, SF0001)
+def _assert_oracle_parity(spark, name, sf_dir):
+    return _assert_matches_oracle(name, sf_dir, QUERIES[name](spark, sf_dir).toArrow())
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES.keys()))
-def test_oracle_parity_sf001(spark, name):
-    """Parity at sf0.01 — the scale factor the driver checks."""
-    _assert_oracle_parity(spark, name, SF001)
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_oracle_parity_sf0001(seed_run, name):
+    _assert_matches_oracle(name, SF0001, seed_run(name, SF0001)[1])
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES.keys()))
-def test_oracle_parity_sf01(spark, name):
-    _assert_oracle_parity(spark, name, SF01)
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_oracle_parity_sf001(seed_run, name):
+    """Parity at sf0.01, the scale of the tier-2 correctness check."""
+    _assert_matches_oracle(name, SF001, seed_run(name, SF001)[1])
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_oracle_parity_sf01(seed_run, name):
+    _assert_matches_oracle(name, SF01, seed_run(name, SF01)[1])
 
 
 def test_hand_made_tables_read_like_the_seed_data(spark, tmp_path):
@@ -109,7 +112,8 @@ def test_parity_mismatch_names_first_differing_row(spark, tmp_path):
 
 
 def test_sessionization_gap_logic(spark, tmp_path):
-    """Focused unit test: a >30min gap starts a new session, <=30min does not."""
+    """Focused unit test: a >30min gap starts a new session, <=30min does not,
+    and every null-ts row is a session of its own."""
     rows = [
         (1, dt.datetime(2024, 1, 1, 0, 0, 0), 7, "view", 1.0, "{}"),
         (2, dt.datetime(2024, 1, 1, 0, 29, 0), 7, "view", 1.0, "{}"),   # same session
@@ -117,6 +121,12 @@ def test_sessionization_gap_logic(spark, tmp_path):
         (4, dt.datetime(2024, 1, 1, 1, 30, 0), 7, "view", 1.0, "{}"),   # same (exactly 30m)
         (6, dt.datetime(2024, 1, 1, 1, 30, 0), 7, "view", 1.0, "{}"),   # tied ts: same session
         (5, dt.datetime(2024, 1, 2, 0, 0, 0), 8, "view", 2.0, "{}"),    # other user
+        (7, None, 9, "view", 1.0, "{}"),                                  # only null ts
+        (8, None, 9, "view", 1.0, "{}"),
+        (9, dt.datetime(2024, 1, 1, 0, 0, 0), 10, "view", 1.0, "{}"),   # null and timed
+        (10, None, 10, "view", 1.0, "{}"),
+        (11, dt.datetime(2024, 1, 1, 0, 10, 0), 10, "view", 1.0, "{}"),
+        (12, dt.datetime(2024, 1, 1, 2, 0, 0), 10, "view", 1.0, "{}"),  # new (110m gap)
     ]
     d = str(tmp_path)
     _write(d, "events", rows)
@@ -124,6 +134,8 @@ def test_sessionization_gap_logic(spark, tmp_path):
     assert out[7]["n_events"] == 5
     assert out[7]["n_sessions"] == 2
     assert out[8]["n_sessions"] == 1
+    assert out[9]["n_sessions"] == 2
+    assert out[10]["n_sessions"] == 1 + 2
 
 
 def test_user_sessions_order_invariant(spark, tmp_path):
@@ -190,19 +202,33 @@ def test_doc_stats_word_count_edge_cases(spark, tmp_path):
 
 def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
     """doc_dedup's groupBy(min_by) keeps the lowest doc_id per text, with
-    that row's metadata, and counts the copies."""
+    that row's metadata, and counts the copies; a null doc_id sorts last, so
+    it survives only as a text's one copy, with its metadata."""
     rows = [
         (10, "hello world", "en", "s1", 11),
         (3, "hello world", "en", "s2", 11),   # dup -> survivor (min id)
+        (None, "hello world", "de", "s3", 11),  # null id loses to any id
         (7, "unique text", "de", "s1", 11),
+        (None, "orphan text", "fr", "s4", 11),  # only copy -> survivor
     ]
     d = str(tmp_path)
     _write(d, "documents", rows)
     out = {r["doc_id"]: r for r in _assert_oracle_parity(spark, "doc_dedup", d)}
-    assert set(out) == {3, 7}
-    assert out[3]["n_copies"] == 2
+    assert set(out) == {3, 7, None}
+    assert out[3]["n_copies"] == 3
     assert out[3]["source"] == "s2"      # metadata travels with the survivor row
     assert out[7]["n_copies"] == 1
+    assert (out[None]["lang"], out[None]["source"], out[None]["n_chars"]) == ("fr", "s4", 11)
+
+
+def test_top_users_ranks_a_null_user_id_last(spark, tmp_path):
+    """A spend tie between a null and a non-null user_id ranks the null one
+    last, as the oracle's ORDER BY user_id does (NULLS LAST)."""
+    d = str(tmp_path)
+    _write(d, "events", [(i, dt.datetime(2024, 1, 1), u, "purchase", v, "{}")
+                         for i, (u, v) in enumerate([(None, 5.0), (1, 5.0), (2, 1.0)], 1)])
+    out = {r["user_id"]: r["rank"] for r in _assert_oracle_parity(spark, "top_users", d)}
+    assert out == {1: 1, None: 2, 2: 3}
 
 
 def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
@@ -289,17 +315,19 @@ def test_label_profile_large_char_counts_match_oracle(spark, tmp_path):
 
 
 @pytest.mark.parametrize("terms, total", [
-    ([4653745697.64496, 4938973494.774893], 9592719192.419853),
+    ([1727646460.319405, 1919143922.475758, 1971395866.458861, 1736575070.372403,
+      1831411950.531862], 9186173270.158289),
     ([5e-07, -5e-07, 1.5e-06, -2.5e-06, 1.0000005, -2.4999995, 0.1, 0.2], -1.2),
     ([-1.25, -3.000001, 2.5, None], -1.750001),
-    ([999999999999.0] * 9, 8999999999991.0),
+    ([1999999999.999999] * 4611, 9221999999999.996),
 ], ids=["past_2_53", "half_units", "negative_and_null", "near_sum_limit"])
 def test_dec_sum_matches_oracle(spark, tmp_path, terms, total):
     """dec_sum rounds each term half away from zero to six decimals and sums
     exactly, independently of both engines: the total is that of Python's
-    Decimal.  Covered: a sum above ~9.0e9, whose µ-units pass 2^53 (DuckDB's
-    binary DECIMAL->DOUBLE cast misrounds it), terms at half units of either
-    sign, a null term, and a sum just below 2^63 µ-units."""
+    Decimal.  Covered: terms below 2e9 whose sum passes ~9.0e9, so its
+    µ-units pass 2^53 (DuckDB's binary DECIMAL->DOUBLE cast misrounds it),
+    terms at half units of either sign, a null term, and a sum just below
+    2^63 µ-units."""
     d = str(tmp_path)
     _write(d, "events", [(i, dt.datetime(2024, 1, 1), 7, "view", v, "{}")
                          for i, v in enumerate(terms, 1)])
@@ -311,20 +339,22 @@ def test_dec_sum_matches_oracle(spark, tmp_path, terms, total):
     _assert_oracle_parity(spark, "candles_hourly", d)
 
 
-_TERM_LIMIT = (SparkRuntimeException, r"dec_sum: \|term\| >= 1e12",
-               duckdb.InvalidInputException, r"dec_sum: \|term\| >= 1e12")
+_TERM_LIMIT = (SparkRuntimeException, r"dec_sum: \|term\| >= 2e9",
+               duckdb.InvalidInputException, r"dec_sum: \|term\| >= 2e9")
 
 
 @pytest.mark.parametrize("terms, spark_error, spark_match, duck_error, duck_match", [
-    *[([v, v], *_TERM_LIMIT) for v in (1e12, -1e12, math.nan, math.inf, -math.inf)],
-    ([999999999999.0] * 10, ArithmeticException, "ARITHMETIC_OVERFLOW",
+    *[([v, v], *_TERM_LIMIT)
+      for v in (1e12, -1e12, 2e9, -2e9, 5000000000.000001, math.nan, math.inf, -math.inf)],
+    ([1999999999.999999] * 4612, ArithmeticException, "ARITHMETIC_OVERFLOW",
      duckdb.ConversionException, "out of range for the destination type INT64"),
-], ids=["1e12", "-1e12", "nan", "inf", "-inf", "sum_past_2_63"])
+], ids=["1e12", "-1e12", "2e9", "-2e9", "5e9_and_1u", "nan", "inf", "-inf", "sum_past_2_63"])
 def test_dec_sum_fails_loudly_past_its_domain(spark, tmp_path, terms, spark_error,
                                              spark_match, duck_error, duck_match):
-    """dec_sum's domain: every term has |x| < 1e12, and a group's sum stays
-    below 2^63 µ-units (~9.22e12).  A term at the limit, NaN or ±inf, or a
-    sum past it, fails on both engines, never giving a silently wrong sum."""
+    """dec_sum's domain: every term has |x| < 2e9, where its rounding is
+    exact, and a group's sum stays below 2^63 µ-units (~9.22e12).  A term at
+    the limit, NaN or ±inf, or a sum past it, fails on both engines, never
+    giving a silently wrong sum (5000000000.000001 would sum to ...002)."""
     d = str(tmp_path)
     _write(d, "events", [(i, dt.datetime(2024, 1, 1), i, "view", v, "{}")
                          for i, v in enumerate(terms, 1)])
