@@ -12,7 +12,10 @@ plus an `interactive` cold pass make 159.  With 100 entries each warm
 compiled the fresh classes again.  It is a static setting, read once per
 JVM, so a new value takes effect only in a new JVM.  AQE, partition
 coalescing, the shuffle partition count and the join strategy are Spark's
-defaults, and tests/test_plans.py pins the plans they produce.
+defaults, and tests/test_plans.py pins the plans they produce.  The session
+time zone is Spark's default too: every query computes on the stored
+TIMESTAMP_NTZ and returns no zoned TIMESTAMP, so no result depends on it
+(tests/test_queries.py runs the tick queries under two other zones).
 """
 
 from __future__ import annotations
@@ -32,14 +35,17 @@ def build_session(app: str = "spark-graft", cpus: int | None = None) -> SparkSes
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "32g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
-        # One BLAS thread per Python worker: Spark tasks are the parallelism
-        # unit; an unpinned OpenBLAS spawns cores() threads per worker and
-        # spin-waits, which measured 2-5x slower on the thin-K GEMMs used by
-        # vector_knn.  OMP_NUM_THREADS also caps pyarrow's CPU pool.
+        # One BLAS thread per Python worker keeps vector_knn's similarities
+        # independent of the BLAS thread count: a multi-threaded GEMM splits
+        # the sums differently, and the last bits of a sim can move.  On 2000
+        # 64-d vectors (4 vCPUs, numpy's OpenBLAS built with MAX_THREADS=2)
+        # the block loop took 24-42 ms pinned and 18-24 ms unpinned in two
+        # probes, and in both the unpinned nn/best bytes differed from the
+        # pinned ones; at 500 vectors they were identical.
+        # OMP_NUM_THREADS also caps pyarrow's CPU pool.
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
     )

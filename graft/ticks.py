@@ -17,7 +17,7 @@ from graft.core import dec_sum, load
 
 RANGE_LO = "2024-01-08 00:00:00"
 RANGE_HI = "2024-01-15 00:00:00"
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
+SESSION_GAP = "INTERVAL 30 MINUTES"
 _ID_OF_VALUE = "CASE WHEN value IS NOT NULL THEN event_id END"
 
 
@@ -35,11 +35,16 @@ def ticks_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Downsampled OHLCV candles per channel per hour (tectonicdb candles)."""
+    """Downsampled OHLCV candles per channel per hour (tectonicdb candles).
+
+    Rows group on ts's day and hour, read from the stored TIMESTAMP_NTZ
+    (date_trunc would cast ts to a TIMESTAMP in the session time zone), and
+    each group's bucket is built once from them, a TIMESTAMP_NTZ as in the
+    oracle.  A null ts gives a null day, hour and bucket."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(
-            F.col("event_type"), F.date_trunc("hour", "ts").alias("bucket")
+            "event_type", F.to_date("ts").alias("day"), F.hour("ts").alias("hour")
         ).agg(
             # a row with a null ordering is skipped, so open and close skip
             # null values, as DuckDB's arg_min/arg_max do
@@ -49,6 +54,11 @@ def candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"max_by(value, {_ID_OF_VALUE})").alias("close"),
             dec_sum("value", "volume"),
             F.count(F.lit(1)).alias("n_ticks"),
+        )
+        .select(
+            "event_type",
+            F.expr("timestampadd(HOUR, hour, CAST(day AS TIMESTAMP_NTZ))").alias("bucket"),
+            "open", "high", "low", "close", "volume", "n_ticks",
         )
     )
 
@@ -92,34 +102,23 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (streaming session_window batch analog): per user,
     number of sessions split at >30 min inactivity gaps.
 
-    Only [user_id, us, value] (24 B/row) cross the one Exchange, and the
-    sort key is (user_id, us), with no event_id tie-break.  That matches the
-    oracle because: (a) n_events and total_value do not depend on order;
-    (b) us = unix_micros(ts) is a bijection (TIMESTAMP_NTZ has exactly µs
-    precision), so ordering by us is ordering by ts, with equal-ts rows in
-    arbitrary order; and (c) the sequence of values of a sorted multiset
-    does not depend on how ties are ordered, so the lag gaps per user, and
-    hence n_sessions = Σ new_session, are the same.  A null ts makes its own
-    session: Spark sorts it first, where it and the row after it have a
-    null lag, and the oracle sorts it last, with a null gap.
+    Only [ts, user_id, value] (24 B/row) cross the one Exchange, and the
+    sort key is (user_id, ts), with no event_id tie-break, so equal-ts rows
+    come in arbitrary order.  That matches the oracle because: (a)
+    n_events and total_value do not depend on order; and (b) the sequence
+    of values of a sorted multiset does not depend on how ties are ordered,
+    so the lag gaps per user, and hence n_sessions, are the same.  A null ts
+    makes its own session: Spark sorts it first, where it and the row after
+    it have a null lag, and the oracle sorts it last, with a null gap.
     """
     ev = load(spark, sf_dir, "events")
-    # parquet ts is TIMESTAMP_NTZ; cast to TIMESTAMP (session TZ pinned to UTC)
-    # so unix_micros matches DuckDB's epoch_us exactly
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    slim = ev.select("user_id", us.alias("us"), "value")
-    w = Window.partitionBy("user_id").orderBy("us")
-    gapped = slim.withColumn("prev_us", F.lag("us").over(w)).withColumn(
-        "new_session",
-        F.when(
-            F.col("prev_us").isNull()
-            | (F.col("us") - F.col("prev_us") > F.lit(SESSION_GAP_US)),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
+    w = Window.partitionBy("user_id").orderBy("ts")
+    gapped = ev.withColumn("prev", F.lag("ts").over(w))
     return gapped.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum("new_session").alias("n_sessions"),
+        F.expr(f"count_if(prev IS NULL OR ts - prev > {SESSION_GAP})").alias(
+            "n_sessions"
+        ),
         dec_sum("value", "total_value"),
     )
 

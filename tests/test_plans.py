@@ -6,9 +6,10 @@ run whose toArrow() result tests/test_queries.py checks against the oracle
 with perfbench's ``_plan_nodes``, and asserts the facts the design relies on:
 how many shuffles it does, which joins it picks, which filters reach the
 parquet scan, what crosses the shuffle where that was narrowed on
-purpose, and that no aggregate sums into a decimal (dec_sum's sum is a
-BIGINT of micro-units).  A setting or rewrite that changes one of them has
-to change this table.
+purpose, that no aggregate sums into a decimal (dec_sum's sum is a
+BIGINT of micro-units), and that no result column is a zoned TIMESTAMP,
+whose value would depend on the session time zone.  A setting or rewrite
+that changes one of them has to change this table.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from collections import Counter
 from typing import NamedTuple
 
 import pytest
+from pyspark.sql.types import TimestampType
 
 from graft import QUERIES
 from perfbench.layers import _plan_nodes, _seq
@@ -39,7 +41,7 @@ PLAN_FACTS = {
     "candles_hourly": Facts(1),
     "vwap_daily": Facts(1),
     "type_stats": Facts(2),
-    "user_sessions": Facts(1, shuffle=(("user_id", "us", "value"), [("user_id", "bigint")])),
+    "user_sessions": Facts(1, shuffle=(("ts", "user_id", "value"), [("user_id", "bigint")])),
     "top_users": Facts(1, has=("TakeOrderedAndProjectExec",),
                        pushed=("EqualTo(event_type,purchase)",)),
     "pricing_summary": Facts(1, pushed=("LessThanOrEqual(l_shipdate,",)),
@@ -59,6 +61,9 @@ def _assert_plan_facts(name, df):
     """PLAN_FACTS[name] on the final plan of df's own QueryExecution, which
     an action on df must already have run."""
     facts = PLAN_FACTS[name]
+    # TimestampNTZType is not a TimestampType subclass
+    zoned = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampType)]
+    assert not zoned, zoned
     nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
     classes = Counter(n.getClass().getSimpleName() for n in nodes)
 

@@ -154,7 +154,7 @@ def test_sessionization_gap_logic(spark, tmp_path):
 
 
 def test_user_sessions_order_invariant(spark, tmp_path):
-    """user_sessions orders by unix_micros only (no event_id tie-break);
+    """user_sessions orders by ts only (no event_id tie-break);
     per-user aggregates must be invariant to input row order, including
     duplicated timestamps around a gap boundary."""
     base = [
@@ -172,6 +172,40 @@ def test_user_sessions_order_invariant(spark, tmp_path):
         results.append((out["n_events"], out["n_sessions"], out["total_value"]))
     assert results[0] == (5, 3, 5.0)
     assert results[0] == results[1] == results[2]
+
+
+@pytest.mark.parametrize("zone", ["America/New_York", "Asia/Kolkata"])
+def test_tick_queries_ignore_the_session_time_zone(spark, tmp_path, zone):
+    """The six events queries compute on the stored TIMESTAMP_NTZ, so they
+    match the oracle under any session time zone: one whose clock skips
+    2024-03-10 02:00-03:00 (02:30 does not exist there) and one with a
+    half-hour offset.  A query that sent ts through the zone would move
+    candles across hour buckets and reorder or regap a user's ticks."""
+    day = dt.datetime(2024, 3, 10)
+    at = [day + dt.timedelta(minutes=m) for m in (60, 100, 140, 150, 180)]
+    d = str(tmp_path)
+    _write(d, "events", [
+        (1, at[0], 7, "view", 1.0, '{"k": 1}'),
+        (2, at[1], 7, "view", 2.0, '{"k": 2}'),       # 40 min apart across 02:00
+        (3, at[2], 7, "purchase", 3.0, '{"k": 1}'),
+        (4, at[3], 7, "purchase", 4.0, '{"k": 3}'),   # 02:30, skipped in New York
+        (5, at[4], 7, "view", 5.0, '{"k": 1}'),       # exactly 30 min later
+        (6, None, 7, "view", 6.0, '{"k": 1}'),
+        (7, dt.datetime(2024, 1, 8), 8, "purchase", 7.0, '{"k": 2}'),  # ticks_range's RANGE_LO
+    ])
+    before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        out = {name: _assert_oracle_parity(spark, name, d)
+               for name, fn in QUERIES.items() if fn.__module__ == "graft.ticks"}
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+    assert len(out) == 6
+    assert {(r["event_type"], r["bucket"]) for r in out["candles_hourly"]} == {
+        ("view", day.replace(hour=1)), ("view", day.replace(hour=3)), ("view", None),
+        ("purchase", day.replace(hour=2)), ("purchase", dt.datetime(2024, 1, 8))}
+    sessions = {r["user_id"]: r["n_sessions"] for r in out["user_sessions"]}
+    assert sessions == {7: 3 + 1, 8: 1}
 
 
 def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path):
