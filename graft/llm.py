@@ -13,19 +13,21 @@ def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup: keep the lowest doc_id per content hash and
     report how many copies it had.
 
-    One groupBy on the hash with min_by + count: one Exchange with a
-    map-side partial aggregate, and only the hash and the metadata cross
-    it, never the text.  doc_id is unique, so min_by(struct, doc_id) picks
-    the row the oracle's row_number() = 1 picks.  The ordering is the struct
-    (doc_id IS NULL, doc_id), because min_by skips a null ordering: a text
+    One groupBy on the hash with min + count: one Exchange with a map-side
+    partial aggregate, and only the hash, one struct of metadata and the
+    count cross it, never the text.  The survivor is the min of the struct
+    (doc_id IS NULL, doc_id, lang, source, n_chars); structs compare field
+    by field, so the first two fields order the copies.  doc_id is unique,
+    so that picks the row the oracle's row_number() = 1 picks, and a text
     whose only copy has a null doc_id keeps that copy's metadata, as the
-    oracle's ORDER BY doc_id (NULLS LAST) does.  Among several null-id
-    copies of one text both engines keep an arbitrary one.  The key is
+    oracle's ORDER BY doc_id (NULLS LAST) does.  Where one text has several
+    null-id copies, Spark keeps the least (lang, source, n_chars) and the
+    oracle an arbitrary one; that case is outside parity.  The key is
     unhex(md5), 16 bytes of BINARY instead of 32 hex chars; unhex is
     injective on md5's hex output, so the groups (and any collision) are
-    the oracle's.  The aggregate stays a SortAggregate: min_by's struct
-    buffer is not UnsafeRow-mutable, so Spark cannot hash-aggregate it, and
-    a join-back that would allow it costs two more Exchanges of the full
+    the oracle's.  The aggregate stays a SortAggregate: a struct buffer is
+    not UnsafeRow-mutable, so Spark cannot hash-aggregate it, and a
+    join-back that would allow it costs two more Exchanges of the full
     metadata.
     """
     docs = load(spark, sf_dir, "documents")
@@ -36,9 +38,8 @@ def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(
             F.expr(
-                "min_by(named_struct('doc_id', doc_id, 'lang', lang,"
-                " 'source', source, 'n_chars', n_chars),"
-                " named_struct('null_id', doc_id IS NULL, 'doc_id', doc_id))"
+                "min(named_struct('null_id', doc_id IS NULL, 'doc_id', doc_id,"
+                " 'lang', lang, 'source', source, 'n_chars', n_chars))"
             ).alias("keep"),
             F.count(F.lit(1)).alias("n_copies"),
         )
@@ -177,6 +178,5 @@ def label_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("lang").alias("n_langs"),
             F.sum("n_chars").alias("total_chars"),
         )
-        .withColumn("avg_chars",
-                    F.col("total_chars").cast("double") / F.col("n_docs").cast("double"))
+        .withColumn("avg_chars", F.col("total_chars") / F.col("n_docs"))
     )

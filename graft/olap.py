@@ -28,10 +28,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("l_extendedprice * (1 - l_discount) * (1 + l_tax)", "sum_charge"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .withColumn("avg_qty", F.col("sum_qty") / F.col("count_order").cast("double"))
-        .withColumn(
-            "avg_price", F.col("sum_base_price") / F.col("count_order").cast("double")
-        )
+        .withColumn("avg_qty", F.col("sum_qty") / F.col("count_order"))
+        .withColumn("avg_price", F.col("sum_base_price") / F.col("count_order"))
     )
 
 

@@ -2,7 +2,8 @@
 
 Core count comes from $SPARK_GRAFT_CPUS (driver contract: the bench is also
 run at reduced core counts to measure scaling, so the master must never be
-hard-coded).  Only settings that change behaviour are set here, and one
+hard-coded).  Four settings are set here: three that change behaviour (the
+driver heap, no web UI and vector_knn's BLAS thread pin, below) and one
 that is there for speed: spark.sql.codegen.cache.maxEntries, the number of
 Janino-compiled generated classes Spark keeps.  Spark's default of 100 is
 below the query set's measured class count: a tier-1 run makes 164 distinct
@@ -44,10 +45,14 @@ def build_session(app: str = "spark-graft", cpus: int | None = None) -> SparkSes
         # 64-d vectors (4 vCPUs, numpy's OpenBLAS built with MAX_THREADS=2)
         # the block loop took 24-42 ms pinned and 18-24 ms unpinned in two
         # probes, and in both the unpinned nn/best bytes differed from the
-        # pinned ones; at 500 vectors they were identical.
-        # OMP_NUM_THREADS also caps pyarrow's CPU pool.
+        # pinned ones; at 500 vectors they were identical.  Spark itself
+        # sets the worker's OMP_NUM_THREADS to spark.task.cpus (1), but
+        # OpenBLAS reads OPENBLAS_NUM_THREADS first, so this pin is what
+        # overrides one the driver inherits: in a worker probe under an
+        # inherited OMP_NUM_THREADS=3 OPENBLAS_NUM_THREADS=2, OpenBLAS ran 1
+        # thread with the pin and 2 without it.
+        # tests/test_queries.py asserts the worker's values.
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -78,9 +78,7 @@ def vwap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("k").alias("total_size"),
         )
         # try_divide: a zero total size gives a null vwap, as in DuckDB
-        .withColumn(
-            "vwap", F.try_divide("notional", F.col("total_size").cast("double"))
-        )
+        .withColumn("vwap", F.try_divide("notional", "total_size"))
     )
 
 

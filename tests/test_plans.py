@@ -30,8 +30,8 @@ class Facts(NamedTuple):
     broadcast_joins: int = 0  # the only join allowed: BroadcastHashJoinExec
     pushed: tuple[str, ...] = ()  # substrings of some scan's PushedFilters
     has: tuple[str, ...] = ()  # node classes that must appear
-    # for a single-Exchange plan: (its input columns or None, [(key, type)])
-    shuffle: tuple[tuple[str, ...] | None, list[tuple[str, str]]] | None = None
+    # for a single-Exchange plan: (its input columns, [(key, type)])
+    shuffle: tuple[tuple[str, ...], list[tuple[str, str]]] | None = None
 
 
 PLAN_FACTS = {
@@ -50,7 +50,7 @@ PLAN_FACTS = {
         "LessThan(o_orderdate,1997-01-01T00:00)")),
     "brand_volume": Facts(1, broadcast_joins=1, pushed=("LessThanOrEqual(p_size,25)",)),
     "priority_backlog": Facts(1, broadcast_joins=1, pushed=("EqualTo(l_returnflag,R)",)),
-    "doc_dedup": Facts(1, shuffle=(None, [("h", "binary")])),
+    "doc_dedup": Facts(1, shuffle=(("h", "min", "count"), [("h", "binary")])),
     "doc_stats": Facts(2),
     "vector_knn": Facts(0, has=("MapInArrowExec",)),
     "label_profile": Facts(2, broadcast_joins=1),
@@ -88,8 +88,7 @@ def _assert_plan_facts(name, df):
     if facts.shuffle is not None:
         cols, keys = facts.shuffle
         (exchange,) = [n for n in nodes if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
-        if cols is not None:
-            assert tuple(a.name() for a in _seq(exchange.child().output())) == cols
+        assert tuple(a.name() for a in _seq(exchange.child().output())) == cols
         part = exchange.outputPartitioning()
         assert part.getClass().getSimpleName() == "HashPartitioning"
         assert [(e.name(), e.dataType().simpleString())

@@ -250,7 +250,7 @@ def test_doc_stats_word_count_edge_cases(spark, tmp_path):
 
 
 def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
-    """doc_dedup's groupBy(min_by) keeps the lowest doc_id per text, with
+    """doc_dedup's groupBy(min) keeps the lowest doc_id per text, with
     that row's metadata, and counts the copies; a null doc_id sorts last, so
     it survives only as a text's one copy, with its metadata."""
     rows = [
@@ -436,6 +436,37 @@ def test_vector_knn_rejects_ragged_or_null_embeddings(spark, tmp_path, rows, mes
     _write(d, "embeddings", [(i, e, 0) for i, e in rows])
     with pytest.raises(PythonException, match=f"ValueError: vector_knn needs {message}"):
         QUERIES["vector_knn"](spark, d).toArrow()
+
+
+def test_python_worker_runs_one_blas_thread(spark):
+    """vector_knn's worker runs numpy's OpenBLAS on one thread, whatever
+    thread counts the driver inherited: build_session pins
+    OPENBLAS_NUM_THREADS, which OpenBLAS reads first, and Spark sets
+    OMP_NUM_THREADS to spark.task.cpus."""
+
+    def blas_env(batches):
+        import ctypes
+        import glob
+        import os
+
+        import numpy as np
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        (lib,) = glob.glob(os.path.join(
+            os.path.dirname(os.path.dirname(np.__file__)), "numpy.libs", "libopenblas*"))
+        threads = ctypes.CDLL(lib).openblas_get_num_threads64_
+        threads.argtypes, threads.restype = [], ctypes.c_int
+        yield pa.RecordBatch.from_pylist([{
+            "openblas": os.environ.get("OPENBLAS_NUM_THREADS"),
+            "omp": os.environ.get("OMP_NUM_THREADS"),
+            "threads": threads(),
+        }])
+
+    got = spark.range(1).coalesce(1).mapInArrow(
+        blas_env, "openblas string, omp string, threads bigint").toArrow()
+    assert got.to_pylist() == [{"openblas": "1", "omp": "1", "threads": 1}]
 
 
 def test_building_a_query_runs_no_spark_job(spark):
